@@ -144,70 +144,65 @@ def _flows_records_ts(eid: pd.Series, ts_ms: pd.Series,
 _N_PACK_BUCKETS = 8
 
 
+def _pack_events(spark, sf_dir: str, out: str, pack,
+                 n_groups: int = _N_PACK_BUCKETS) -> None:
+    """Distributed capture synthesis: group the events table's
+    ``(event_id, ts)`` rows on ``event_id % n_groups`` and call
+    ``pack(out, bucket, pdf)`` once per group inside an ``applyInPandas``
+    task, with ``pdf`` sorted by event_id. ``pack`` writes the group's
+    capture files; their content is a pure function of the group's rows,
+    so the files are deterministic regardless of cluster layout. Only
+    one status row per group is collected — a write barrier, not data
+    movement. On a real cluster /tmp becomes a shared filesystem or
+    object-store prefix."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("event_id")
+        bucket = int(pdf["event_id"].iloc[0]) % n_groups
+        pack(out, bucket, pdf)
+        return pd.DataFrame({"bucket": [bucket]})
+
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
+    status = (
+        ev.groupBy((F.col("event_id") % n_groups).alias("b"))
+        .applyInPandas(run, schema="bucket int")
+    )
+    # an ordinary statement, NOT an assert: under python -O an assert (and
+    # the pack job inside it) would be stripped entirely, marking an
+    # empty directory as built
+    if status.count() == 0:
+        raise RuntimeError(f"capture synthesis packed 0 groups at {out}")
+
+
 def _datagram_dir(spark, sf_dir: str, kind: str) -> str:
     """Write synthetic datagram files once per (kind, sf); reuse after.
 
     ``kind="mixed"`` interleaves v5/v9/IPFIX datagrams in the same capture
     files — the on-the-wire reality of a collector port shared by
-    heterogeneous exporters.
-
-    Scale: synthesis is DISTRIBUTED — events are grouped by
-    ``event_id % _N_PACK_BUCKETS`` and each group packs + writes its own
-    capture file inside an ``applyInPandas`` task (content is a pure
-    function of the bucket's rows, so the files are deterministic
-    regardless of cluster layout). The driver only sees one status row per
-    bucket. Every graded aggregate over the decoded flows is invariant to
-    how flows are sharded across capture files. On a real cluster /tmp
-    becomes a shared filesystem or object-store prefix.
+    heterogeneous exporters. One capture file per pack bucket
+    (:func:`_pack_events`); every graded aggregate over the decoded flows
+    is invariant to how flows are sharded across capture files.
     """
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/nf2pq_flows_{kind}_{tag}"
-    done = os.path.join(out, "_DONE")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(done):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(done, stamp):
-            shutil.rmtree(out, ignore_errors=True)
-            os.makedirs(out, exist_ok=True)
+    def pack(out, bucket, pdf):
+        flows = _flows_records(pdf["event_id"], pdf["ts"])
+        if kind == "mixed":
+            parts = [encode_netflow_v5(flows), encode_netflow_v9(flows),
+                     encode_ipfix(flows)]
+            dgrams = [d for trio in zip(*parts) for d in trio]
+            # tails beyond the shortest list (counts differ per format)
+            shortest = min(len(p) for p in parts)
+            for p in parts:
+                dgrams.extend(p[shortest:])
+        else:
+            encode = {"v5": encode_netflow_v5, "v9": encode_netflow_v9,
+                      "ipfix": encode_ipfix}[kind]
+            dgrams = encode(flows)
+        write_capture_file(os.path.join(out, f"cap_{bucket:05d}.bin"), dgrams)
 
-            def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("event_id")
-                bucket = int(pdf["event_id"].iloc[0]) % _N_PACK_BUCKETS
-                flows = _flows_records(pdf["event_id"], pdf["ts"])
-                if kind == "mixed":
-                    parts = [encode_netflow_v5(flows), encode_netflow_v9(flows),
-                             encode_ipfix(flows)]
-                    dgrams = [d for trio in zip(*parts) for d in trio]
-                    # tails beyond the shortest list (counts differ per format)
-                    shortest = min(len(p) for p in parts)
-                    for p in parts:
-                        dgrams.extend(p[shortest:])
-                else:
-                    encode = {"v5": encode_netflow_v5, "v9": encode_netflow_v9,
-                              "ipfix": encode_ipfix}[kind]
-                    dgrams = encode(flows)
-                write_capture_file(
-                    os.path.join(out, f"cap_{bucket:05d}.bin"), dgrams)
-                return pd.DataFrame({"bucket": [bucket], "n": [len(flows)]})
-
-            ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-            status = (
-                ev.groupBy((F.col("event_id") % _N_PACK_BUCKETS).alias("b"))
-                .applyInPandas(pack_group, schema="bucket int, n long")
-            )
-            # O(buckets) rows to the driver — a write barrier, not data
-            # movement. An ordinary statement, NOT an assert: under python -O
-            # an assert (and the pack job inside it) would be stripped
-            # entirely, caching _DONE over an empty directory.
-            n_buckets = status.count()
-            if n_buckets == 0:
-                raise RuntimeError(f"capture synthesis packed 0 buckets at {out}")
-            write_cache_marker(done, stamp)
-    return out
+    return materialize_once(
+        f"flows_{kind}", sf_dir, ("events",),
+        lambda out: _pack_events(spark, sf_dir, out, pack))
 
 
 @register(
@@ -842,49 +837,26 @@ def _sampled_dir(spark, sf_dir: str) -> str:
     RFC 7011 §8.1), flows follow as ordinary IPFIX data sets."""
     from ..sources.ipfix import encode_ipfix_options
 
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/nf2pq_flows_sampled_{tag}"
-    done = os.path.join(out, "_DONE")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(done):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(done, stamp):
-            shutil.rmtree(out, ignore_errors=True)
-            exp_conf = {0: (64, "samp-a"), 1: (256, "samp-b")}
-            for e in exp_conf:
-                os.makedirs(os.path.join(out, f"exp{e}"), exist_ok=True)
+    exp_conf = {0: (64, "samp-a"), 1: (256, "samp-b")}
 
-            def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("event_id")
-                eid0 = int(pdf["event_id"].iloc[0])
-                exp, sub = eid0 % 2, (eid0 // 2) % _N_PACK_BUCKETS
-                rate, sname = exp_conf[exp]
-                dgrams = encode_ipfix(_flows_records(pdf["event_id"], pdf["ts"]))
-                opts = encode_ipfix_options([{149: 1, 34: rate, 35: 2, 84: sname}])
-                write_capture_file(
-                    os.path.join(out, f"exp{exp}", f"cap_{sub:05d}.bin"),
-                    [opts] + dgrams)
-                return pd.DataFrame({"exp": [exp], "n": [len(pdf)]})
+    # groups on event_id % 16 split rows exactly as (exporter, sub-bucket)
+    # = (eid % 2, (eid // 2) % 8) does
+    def pack(out, bucket, pdf):
+        exp, sub = bucket % 2, bucket // 2
+        rate, sname = exp_conf[exp]
+        dgrams = encode_ipfix(_flows_records(pdf["event_id"], pdf["ts"]))
+        opts = encode_ipfix_options([{149: 1, 34: rate, 35: 2, 84: sname}])
+        d = os.path.join(out, f"exp{exp}")
+        os.makedirs(d, exist_ok=True)
+        write_capture_file(os.path.join(d, f"cap_{sub:05d}.bin"),
+                           [opts] + dgrams)
 
-            # distributed packing: (exporter, sub-bucket) groups write their own
-            # option-announcing capture files executor-side (see _datagram_dir)
-            ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-            status = (
-                ev.groupBy((F.col("event_id") % 2).alias("e"),
-                           ((F.col("event_id") / 2).cast("long")
-                            % _N_PACK_BUCKETS).alias("s"))
-                .applyInPandas(pack_group, schema="exp int, n long")
-            )
-            # ordinary statement, not assert — see _datagram_dir's barrier
-            n_groups = status.count()
-            if n_groups == 0:
-                raise RuntimeError(f"sampled synthesis packed 0 groups at {out}")
-            write_cache_marker(done, stamp)
-    return out
+    return materialize_once(
+        "flows_sampled", sf_dir, ("events",),
+        lambda out: _pack_events(spark, sf_dir, out, pack,
+                                 n_groups=2 * _N_PACK_BUCKETS))
 
 
 @register(
@@ -1234,30 +1206,15 @@ def s5c_capture_datasource_writer(spark, sf_dir):
     from ..sources.datasource import register_capture_source
 
     register_capture_source(spark)
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/nf2pq_flows_written_{tag}"
-    done = os.path.join(out, "_DONE")
-    # |capfmt2: the batch writer now publishes via _committed_<jobid>
-    # markers that the reader filters on — a dir cached by the pre-marker
-    # code would read back EMPTY, so the format bump forces one rewrite
-    stamp = source_stamp(sf_dir, "events") + "|capfmt2"
-    with cache_lock(done):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(done, stamp):
-            # stale marker = first run, a PARTIAL previous run that died
-            # mid-write, or a regenerated source fixture; clear leftovers so
-            # the rewrite can't duplicate flows (the writer's deterministic
-            # per-partition names make in-run task retries safe, this makes
-            # cross-run retries safe)
-            shutil.rmtree(out, ignore_errors=True)
-            os.makedirs(out, exist_ok=True)
-            flows = _flow_columns(load_table(spark, sf_dir, "events"))
-            flows.write.format("nfcapture").mode("append").save(out)
-            write_cache_marker(done, stamp)
+    def build(out):
+        # the writer's deterministic per-partition names make in-run task
+        # retries safe; the cleared directory makes cross-run retries safe
+        flows = _flow_columns(load_table(spark, sf_dir, "events"))
+        flows.write.format("nfcapture").mode("append").save(out)
+
+    out = materialize_once("flows_written", sf_dir, ("events",), build)
     back = spark.read.format("nfcapture").load(out)
     return back.groupBy("pr").agg(
         F.count(F.lit(1)).alias("n_flows"),
@@ -1425,43 +1382,22 @@ def _gap_capture_dir(spark, sf_dir: str) -> str:
     per pack bucket (sequence counters are per-exporter state, so each
     bucket must be its own exporter — unlike the shared-dir flow fixtures
     where decode is order/origin-insensitive)."""
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/nf2pq_flows_gap_{tag}"
-    done = os.path.join(out, "_DONE")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(done):
-        if not cache_current(done, stamp):
-            shutil.rmtree(out, ignore_errors=True)
-            os.makedirs(out, exist_ok=True)
+    def pack(out, bucket, pdf):
+        flows = _flows_records(pdf["event_id"], pdf["ts"])
+        for kind, enc in (("v5", encode_netflow_v5),
+                          ("v9", encode_netflow_v9)):
+            dgrams = enc(flows, per_packet=_GAP_PER_PACKET)
+            kept = [d for m, d in enumerate(dgrams)
+                    if m % _GAP_DROP_MOD != _GAP_DROP_RESIDUE]
+            d = os.path.join(out, kind, f"exp_{bucket:02d}")
+            os.makedirs(d, exist_ok=True)
+            write_capture_file(os.path.join(d, "cap_00000.bin"), kept)
 
-            def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("event_id")
-                bucket = int(pdf["event_id"].iloc[0]) % _N_PACK_BUCKETS
-                flows = _flows_records(pdf["event_id"], pdf["ts"])
-                for kind, enc in (("v5", encode_netflow_v5),
-                                  ("v9", encode_netflow_v9)):
-                    dgrams = enc(flows, per_packet=_GAP_PER_PACKET)
-                    kept = [d for m, d in enumerate(dgrams)
-                            if m % _GAP_DROP_MOD != _GAP_DROP_RESIDUE]
-                    d = os.path.join(out, kind, f"exp_{bucket:02d}")
-                    os.makedirs(d, exist_ok=True)
-                    write_capture_file(os.path.join(d, "cap_00000.bin"),
-                                       kept)
-                return pd.DataFrame({"bucket": [bucket], "n": [len(flows)]})
-
-            ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-            status = (
-                ev.groupBy((F.col("event_id") % _N_PACK_BUCKETS).alias("b"))
-                .applyInPandas(pack_group, schema="bucket int, n long")
-            )
-            if status.count() == 0:
-                raise RuntimeError(f"gap-capture synthesis packed 0 buckets"
-                                   f" at {out}")
-            write_cache_marker(done, stamp)
-    return out
+    return materialize_once(
+        "flows_gap", sf_dir, ("events",),
+        lambda out: _pack_events(spark, sf_dir, out, pack))
 
 
 def _wrap_capture_dir(spark, sf_dir: str) -> str:
@@ -1471,44 +1407,24 @@ def _wrap_capture_dir(spark, sf_dir: str) -> str:
     day — every rel beyond the wrap threshold is a flow that started
     before the counter wrapped. Both formats carry the same clock and
     the same rel values, so their decoded absolute ms must agree."""
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/nf2pq_flows_wrap_{tag}"
-    done = os.path.join(out, "_DONE")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(done):
-        if not cache_current(done, stamp):
-            shutil.rmtree(out, ignore_errors=True)
-            os.makedirs(out, exist_ok=True)
+    def pack(out, bucket, pdf):
+        eid = pdf["event_id"].reset_index(drop=True).astype("int64")
+        rel = (eid * _WRAP_MIX) % 2**32
+        flows = _flows_records_ts(eid, rel, (rel + 1000) % 2**32)
+        for kind, enc in (("v5", encode_netflow_v5),
+                          ("v9", encode_netflow_v9)):
+            dgrams = enc(flows, sys_uptime=_WRAP_SYS_UPTIME_MS,
+                         unix_secs=_WRAP_UNIX_SECS)
+            d = os.path.join(out, kind)
+            os.makedirs(d, exist_ok=True)
+            write_capture_file(os.path.join(d, f"cap_{bucket:05d}.bin"),
+                               dgrams)
 
-            def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("event_id")
-                bucket = int(pdf["event_id"].iloc[0]) % _N_PACK_BUCKETS
-                eid = pdf["event_id"].reset_index(drop=True).astype("int64")
-                rel = (eid * _WRAP_MIX) % 2**32
-                flows = _flows_records_ts(eid, rel, (rel + 1000) % 2**32)
-                for kind, enc in (("v5", encode_netflow_v5),
-                                  ("v9", encode_netflow_v9)):
-                    dgrams = enc(flows, sys_uptime=_WRAP_SYS_UPTIME_MS,
-                                 unix_secs=_WRAP_UNIX_SECS)
-                    d = os.path.join(out, kind)
-                    os.makedirs(d, exist_ok=True)
-                    write_capture_file(
-                        os.path.join(d, f"cap_{bucket:05d}.bin"), dgrams)
-                return pd.DataFrame({"bucket": [bucket], "n": [len(flows)]})
-
-            ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-            status = (
-                ev.groupBy((F.col("event_id") % _N_PACK_BUCKETS).alias("b"))
-                .applyInPandas(pack_group, schema="bucket int, n long")
-            )
-            if status.count() == 0:
-                raise RuntimeError(f"wrap-capture synthesis packed 0 buckets"
-                                   f" at {out}")
-            write_cache_marker(done, stamp)
-    return out
+    return materialize_once(
+        "flows_wrap", sf_dir, ("events",),
+        lambda out: _pack_events(spark, sf_dir, out, pack))
 
 
 @register(
@@ -1658,7 +1574,7 @@ def _varlen_app(eid: int) -> str:
             if eid % _VARLEN_LONG_MOD == 0 else f"app_{eid % 5}")
 
 
-def _varlen_fixture_dir(spark, sf_dir: str, out_prefix: str,
+def _varlen_fixture_dir(spark, sf_dir: str, name: str,
                         fields: list, template_id: int,
                         string_fns: dict,
                         extra_templates: list | None = None) -> str:
@@ -1670,44 +1586,23 @@ def _varlen_fixture_dir(spark, sf_dir: str, out_prefix: str,
     extra values in ``string_fns`` (flow-dict key → fn(event_id) →
     value, derived arithmetically so the oracles recompute them
     exactly). ``extra_templates`` announces RFC 6313 sub-templates in
-    the same template set."""
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    the same template set. ``name`` is the /tmp cache name."""
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"{out_prefix}_{tag}"
-    done = os.path.join(out, "_DONE")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(done):
-        if not cache_current(done, stamp):
-            shutil.rmtree(out, ignore_errors=True)
-            os.makedirs(out, exist_ok=True)
+    def pack(out, bucket, pdf):
+        flows = _flows_records(pdf["event_id"], pdf["ts"])
+        kept_eids = pdf["event_id"][pdf["ts"].notna()]
+        for f, eid in zip(flows, kept_eids):
+            for key, fn in string_fns.items():
+                f[key] = fn(int(eid))
+        dgrams = encode_ipfix(flows, template_fields=fields,
+                              template_id=template_id,
+                              extra_templates=extra_templates)
+        write_capture_file(os.path.join(out, f"cap_{bucket:05d}.bin"), dgrams)
 
-            def pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("event_id")
-                bucket = int(pdf["event_id"].iloc[0]) % _N_PACK_BUCKETS
-                flows = _flows_records(pdf["event_id"], pdf["ts"])
-                kept_eids = pdf["event_id"][pdf["ts"].notna()]
-                for f, eid in zip(flows, kept_eids):
-                    for key, fn in string_fns.items():
-                        f[key] = fn(int(eid))
-                dgrams = encode_ipfix(flows, template_fields=fields,
-                                      template_id=template_id,
-                                      extra_templates=extra_templates)
-                write_capture_file(
-                    os.path.join(out, f"cap_{bucket:05d}.bin"), dgrams)
-                return pd.DataFrame({"bucket": [bucket], "n": [len(flows)]})
-
-            ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-            status = (
-                ev.groupBy((F.col("event_id") % _N_PACK_BUCKETS).alias("b"))
-                .applyInPandas(pack_group, schema="bucket int, n long")
-            )
-            if status.count() == 0:
-                raise RuntimeError(f"varlen-capture synthesis packed 0 "
-                                   f"buckets at {out}")
-            write_cache_marker(done, stamp)
-    return out
+    return materialize_once(
+        name, sf_dir, ("events",),
+        lambda out: _pack_events(spark, sf_dir, out, pack))
 
 
 def _varlen_capture_dir(spark, sf_dir: str) -> str:
@@ -1717,7 +1612,7 @@ def _varlen_capture_dir(spark, sf_dir: str) -> str:
     fields = [(8, 4), (12, 4), (7, 2), (11, 2), (4, 1),
               (96, _VARLEN),                  # varlen mid-template
               (6, 1), (2, 4), (1, 4), (152, 8), (153, 8), (16, 4), (17, 4)]
-    return _varlen_fixture_dir(spark, sf_dir, "/tmp/nf2pq_flows_varlen",
+    return _varlen_fixture_dir(spark, sf_dir, "flows_varlen",
                                fields, 330, {"app": _varlen_app})
 
 
@@ -1789,7 +1684,7 @@ def _multi_varlen_capture_dir(spark, sf_dir: str) -> str:
               (6, 1), (2, 4),                 # fixed fields between
               (94, _VARLEN),                  # second varlen
               (1, 4), (152, 8), (153, 8), (16, 4), (17, 4)]
-    return _varlen_fixture_dir(spark, sf_dir, "/tmp/nf2pq_flows_varlen2",
+    return _varlen_fixture_dir(spark, sf_dir, "flows_varlen2",
                                fields, 331,
                                {"app": _varlen_app, "desc": _varlen_desc})
 
@@ -1867,7 +1762,7 @@ def _basiclist_capture_dir(spark, sf_dir: str) -> str:
     fields = [(8, 4), (12, 4), (7, 2), (11, 2), (4, 1),
               (291, _VARLEN),                 # basicList mid-template
               (6, 1), (2, 4), (1, 4), (152, 8), (153, 8), (16, 4), (17, 4)]
-    return _varlen_fixture_dir(spark, sf_dir, "/tmp/nf2pq_flows_blist",
+    return _varlen_fixture_dir(spark, sf_dir, "flows_blist",
                                fields, 332, {"blist": _blist_ports})
 
 
@@ -1953,7 +1848,7 @@ def _pen_capture_dir(spark, sf_dir: str) -> str:
     field specs (8-byte specs on the wire) among the standard fixed
     numerics — the layout that misaligned the 4-byte field walk before
     r13 and silently decoded wrong records."""
-    return _varlen_fixture_dir(spark, sf_dir, "/tmp/nf2pq_flows_pen",
+    return _varlen_fixture_dir(spark, sf_dir, "flows_pen",
                                _PEN_FIELDS, 333, _PEN_VALUE_FNS)
 
 
@@ -2043,7 +1938,7 @@ def _subtemplate_capture_dir(spark, sf_dir: str) -> str:
               (293, _VARLEN),                 # subTemplateMultiList
               (2, 4), (1, 4), (152, 8), (153, 8), (16, 4), (17, 4)]
     return _varlen_fixture_dir(
-        spark, sf_dir, "/tmp/nf2pq_flows_stl", fields, 334,
+        spark, sf_dir, "flows_stl", fields, 334,
         {"stl": _stl_payload, "stml": _stml_payload},
         extra_templates=[(345, _STL_SUB), (346, _STML_SUB_A),
                          (347, _STML_SUB_B)])

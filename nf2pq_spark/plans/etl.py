@@ -139,41 +139,33 @@ def etl2_partition_overwrite(spark, sf_dir):
     import os
     import shutil
 
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/nf2pq_etl2_{tag}"
-    marker = os.path.join(path, "_RESTATED")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(marker):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(marker, stamp):
-            shutil.rmtree(path, ignore_errors=True)
-            ev = load_table(spark, sf_dir, "events").withColumn(
-                "d", F.date_format("ts", "yyyy-MM-dd"))
-            # initial build: full (static) overwrite, date-partitioned layout
-            ev.write.partitionBy("d").mode("overwrite").parquet(path)
-            # restatement: recompute one day, dynamic overwrite of that
-            # partition only
-            corrected = ev.filter(
-                (F.col("d") == "2024-01-15") & (F.col("event_type") != "view"))
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                  "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                if corrected.limit(1).count() == 0:
-                    # dynamic overwrite writes no partitions for an empty frame,
-                    # which would silently leave the stale day in place — an
-                    # empty restatement means "delete the partition"
-                    shutil.rmtree(os.path.join(path, "d=2024-01-15"),
-                                  ignore_errors=True)
-                else:
-                    corrected.write.partitionBy("d").mode("overwrite").parquet(path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            write_cache_marker(marker, stamp)
+    def build(path):
+        ev = load_table(spark, sf_dir, "events").withColumn(
+            "d", F.date_format("ts", "yyyy-MM-dd"))
+        # initial build: full (static) overwrite, date-partitioned layout
+        ev.write.partitionBy("d").mode("overwrite").parquet(path)
+        # restatement: recompute one day, dynamic overwrite of that
+        # partition only
+        corrected = ev.filter(
+            (F.col("d") == "2024-01-15") & (F.col("event_type") != "view"))
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
+                              "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            if corrected.limit(1).count() == 0:
+                # dynamic overwrite writes no partitions for an empty frame,
+                # which would silently leave the stale day in place — an
+                # empty restatement means "delete the partition"
+                shutil.rmtree(os.path.join(path, "d=2024-01-15"),
+                              ignore_errors=True)
+            else:
+                corrected.write.partitionBy("d").mode("overwrite").parquet(path)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+    path = materialize_once("etl2", sf_dir, ("events",), build)
     df = spark.read.parquet(path)
     return (
         df.groupBy(F.col("d").cast("string").alias("d"))
@@ -206,38 +198,27 @@ def etl2_partition_overwrite(spark, sf_dir):
 )
 def etl3_compaction_roundtrip(spark, sf_dir):
     import os
-    import shutil
 
     from ..operators.compact import compact_parquet
+    from .helpers import materialize_once
 
-    # tag-keyed cached layout + marker (etl2's pattern): the previous
-    # tempfile.mkdtemp-per-invocation left a fresh ~201-file directory in
-    # /tmp on EVERY run (driver grade, bench iteration) and redid the
-    # 200-file write each time
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    # cached layout: a fresh directory per invocation would leave a
+    # ~201-file tree in /tmp on every run and redo the 200-file write
+    def build(base):
+        small = os.path.join(base, "small")
+        compacted = os.path.join(base, "big")
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_type", "user_id", "value")
+        ev.repartition(200).write.parquet(small)  # the accreted-sink layout
+        compact_parquet(spark, small, compacted, target_mb=512)
+        n_small = len([f for f in os.listdir(small) if f.endswith(".parquet")])
+        n_big = len([f for f in os.listdir(compacted) if f.endswith(".parquet")])
+        if n_big * 10 > n_small:  # plain statement: must survive python -O
+            raise RuntimeError(f"compaction didn't shrink 10x: "
+                               f"{n_small} -> {n_big}")
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = f"/tmp/nf2pq_etl3_{tag}"
-    small, compacted = os.path.join(base, "small"), os.path.join(base, "big")
-    marker = os.path.join(base, "_BUILT")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(marker):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(marker, stamp):
-            shutil.rmtree(base, ignore_errors=True)  # partial or stale prior run
-            ev = load_table(spark, sf_dir, "events").select(
-                "event_type", "user_id", "value")
-            ev.repartition(200).write.parquet(small)  # the accreted-sink layout
-            compact_parquet(spark, small, compacted, target_mb=512)
-            n_small = len([f for f in os.listdir(small) if f.endswith(".parquet")])
-            n_big = len([f for f in os.listdir(compacted) if f.endswith(".parquet")])
-            if n_big * 10 > n_small:  # plain statement: must survive python -O
-                raise RuntimeError(f"compaction didn't shrink 10x: "
-                                   f"{n_small} -> {n_big}")
-            write_cache_marker(marker, stamp)
-    out = spark.read.parquet(compacted)
+    base = materialize_once("etl3", sf_dir, ("events",), build)
+    out = spark.read.parquet(os.path.join(base, "big"))
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("user_id").alias("sum_user"),

@@ -169,9 +169,8 @@ def _code_stamp(pkg_root: str | None = None) -> str:
     Any code change therefore invalidates all stamped caches — the third
     staleness mode (after fixture regeneration and tree swaps): a cache
     whose WRITER changed layout or content between rounds otherwise
-    reads as current forever on a long-lived machine, and the one manual
-    guard against it (a hand-bumped version suffix like collector.py's
-    ``|capfmt2``) only works when someone remembers to bump it. Rebuild
+    reads as current forever on a long-lived machine, and a hand-bumped
+    version suffix only works when someone remembers to bump it. Rebuild
     cost is seconds at the graded scale factors; over-invalidation is
     the safe direction. ``pkg_root`` overrides the scanned tree (tests);
     only the default scan is cached."""
@@ -305,11 +304,46 @@ def cache_current(marker: str, stamp: str) -> bool:
 def write_cache_marker(marker: str, stamp: str) -> None:
     """Record ``stamp`` plus a manifest of the marker's directory tree
     (see :func:`_dir_manifest`). Call only AFTER all cache data is
-    written — every call site does (marker-last is the crash-safety
-    protocol: an unmarked partial cache is rebuilt, never trusted)."""
+    written (marker-last is the crash-safety protocol: an unmarked
+    partial cache is rebuilt, never trusted)."""
     import os
 
     manifest = _dir_manifest(os.path.dirname(os.path.abspath(marker)),
                              os.path.abspath(marker))
     with open(marker, "w") as fh:
         fh.write(stamp + "\n" + manifest)
+
+
+def materialize_once(name: str, sf_dir: str, tables, build) -> str:
+    """Build the /tmp fixture cache ``/tmp/nf2pq_{name}_{basename(sf_dir)}``
+    once per identity of its source ``tables`` and return its path.
+
+    The one copy of the cache protocol:
+
+    - identity: :func:`source_stamp` over ``tables`` — fixture path, mtime
+      and size per table plus the package code stamp, so a regenerated
+      fixture, a same-named leaf dir in another tree, or any code change
+      rebuilds;
+    - concurrency: :func:`cache_lock` on the ``<path>.lock`` sibling,
+      and the marker is re-checked under the lock, so a cache that a
+      concurrent process finished meanwhile is read, not rebuilt over;
+    - rebuild: the directory is removed and recreated empty, so no file
+      of a stale or partial generation survives, then ``build(path)``
+      writes the data;
+    - marker last: ``_BUILT`` records the stamp plus a manifest of every
+      file (:func:`write_cache_marker`). A build that raises leaves no
+      marker and the next call rebuilds; a file later deleted or
+      truncated by a /tmp cleaner makes :func:`cache_current` fail."""
+    import os
+    import shutil
+
+    out = f"/tmp/nf2pq_{name}_{os.path.basename(os.path.normpath(sf_dir))}"
+    marker = os.path.join(out, "_BUILT")
+    stamp = source_stamp(sf_dir, *tables)
+    with cache_lock(marker):
+        if not cache_current(marker, stamp):
+            shutil.rmtree(out, ignore_errors=True)
+            os.makedirs(out)
+            build(out)
+            write_cache_marker(marker, stamp)
+    return out

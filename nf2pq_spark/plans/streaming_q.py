@@ -297,34 +297,24 @@ def _chunked_events_dir(spark, sf_dir: str, n_chunks: int = 4) -> str:
     one task so every chunk directory holds exactly one file. The events
     table never crosses the driver.
     """
-    import os
+    from .helpers import materialize_once
 
-    import shutil
+    def build(out):
+        ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
+        us = ev.withColumn("ts_us", F.unix_micros("ts"))
+        bounds = us.stat.approxQuantile(
+            "ts_us", [i / n_chunks for i in range(1, n_chunks)], 0.01)
+        chunk = sum(
+            (F.col("ts_us") > F.lit(int(b))).cast("int") for b in bounds)
+        (us.withColumn("chunk", chunk)
+           .drop("ts_us")
+           .repartition(n_chunks, "chunk")
+           .write.mode("overwrite").partitionBy("chunk").parquet(out))
 
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/nf2pq_events_chunks_{tag}"
-    done = os.path.join(out, "_DONE")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(done):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(done, stamp):
-            shutil.rmtree(out, ignore_errors=True)
-            ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
-            us = ev.withColumn("ts_us", F.unix_micros("ts"))
-            bounds = us.stat.approxQuantile(
-                "ts_us", [i / n_chunks for i in range(1, n_chunks)], 0.01)
-            chunk = sum(
-                (F.col("ts_us") > F.lit(int(b))).cast("int") for b in bounds)
-            (us.withColumn("chunk", chunk)
-               .drop("ts_us")
-               .repartition(n_chunks, "chunk")
-               .write.mode("overwrite").partitionBy("chunk").parquet(out))
-            write_cache_marker(done, stamp)
-    return out
+    # n_chunks is part of the cache identity: layouts of different chunk
+    # counts must never be served for one another
+    return materialize_once(f"events_chunks_{n_chunks}", sf_dir, ("events",),
+                            build)
 
 
 #: stream schema for the chunked-events layout (chunk is the partition dir)
@@ -600,47 +590,35 @@ def _watermark_chunks_dir(spark, sf_dir: str) -> str:
     quantiles to the driver, bucketing + write executor-side; the driver
     only re-stamps three file mtimes (metadata, not data).
     """
+    import glob as globmod
     import os
+    import time
 
-    import shutil
+    from .helpers import materialize_once
 
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    def build(out):
+        ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
+        us = ev.withColumn("ts_us", F.unix_micros("ts"))
+        q10, med, q75 = us.stat.approxQuantile(
+            "ts_us", [0.1, 0.5, 0.75], 0.01)
+        chunk = (
+            (F.col("ts_us") > int(med)).cast("int")
+            + (F.col("ts_us") > int(q75)).cast("int")
+        )
+        late_dups = us.filter(F.col("ts_us") <= int(q10)).withColumn(
+            "chunk", F.lit(2))
+        chunked = (
+            us.withColumn("chunk", chunk).unionAll(late_dups).drop("ts_us")
+        )
+        (chunked.repartition(3, "chunk")
+            .write.mode("overwrite").partitionBy("chunk").parquet(out))
+        # order the three micro-batches explicitly (file source sorts by mtime)
+        now = time.time()
+        for i in (0, 1, 2):
+            for f in globmod.glob(os.path.join(out, f"chunk={i}", "*.parquet")):
+                os.utime(f, (now - 100 + i * 30, now - 100 + i * 30))
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/nf2pq_wm_chunks_{tag}"
-    done = os.path.join(out, "_DONE")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(done):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(done, stamp):
-            shutil.rmtree(out, ignore_errors=True)
-            ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
-            us = ev.withColumn("ts_us", F.unix_micros("ts"))
-            q10, med, q75 = us.stat.approxQuantile(
-                "ts_us", [0.1, 0.5, 0.75], 0.01)
-            chunk = (
-                (F.col("ts_us") > int(med)).cast("int")
-                + (F.col("ts_us") > int(q75)).cast("int")
-            )
-            late_dups = us.filter(F.col("ts_us") <= int(q10)).withColumn(
-                "chunk", F.lit(2))
-            chunked = (
-                us.withColumn("chunk", chunk).unionAll(late_dups).drop("ts_us")
-            )
-            (chunked.repartition(3, "chunk")
-                .write.mode("overwrite").partitionBy("chunk").parquet(out))
-            # order the three micro-batches explicitly (file source sorts by mtime)
-            import glob as globmod
-            import time
-
-            now = time.time()
-            for i in (0, 1, 2):
-                for f in globmod.glob(os.path.join(out, f"chunk={i}", "*.parquet")):
-                    os.utime(f, (now - 100 + i * 30, now - 100 + i * 30))
-            write_cache_marker(done, stamp)
-    return out
+    return materialize_once("wm_chunks", sf_dir, ("events",), build)
 
 
 def _st10_core(src):

@@ -231,31 +231,17 @@ def j8c_asof_hot_key(spark, sf_dir):
     bench=True,
 )
 def rl1_hypertable_rollup(spark, sf_dir):
-    import os
-    import shutil
-
     from ..operators.rollup import build_rollup, query_rollup
-    from .helpers import (cache_current, cache_lock, source_stamp,
-                          write_cache_marker)
+    from .helpers import materialize_once
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/nf2pq_rollup_{tag}"
     # materialize once per source-fixture IDENTITY (the continuous
     # aggregate is maintained incrementally in production —
     # tests/test_streaming.py covers that); repeated queries then show
     # the rollup's point: answering from the small aggregate, not the
-    # raw events. The marker records the events.parquet stamp so a
-    # regenerated fixture (or a same-named leaf dir in another tree)
-    # rebuilds instead of silently serving stale aggregates.
-    marker = os.path.join(path, "_BUILT")
-    stamp = source_stamp(sf_dir, "events")
-    with cache_lock(marker):
-        # re-check under the lock: a concurrent grader may have
-        # finished the same rebuild while we waited
-        if not cache_current(marker, stamp):
-            shutil.rmtree(path, ignore_errors=True)
-            build_rollup(load_table(spark, sf_dir, "events"), path)
-            write_cache_marker(marker, stamp)
+    # raw events.
+    path = materialize_once(
+        "rollup", sf_dir, ("events",),
+        lambda out: build_rollup(load_table(spark, sf_dir, "events"), out))
     return query_rollup(spark, path, grain="day")
 
 

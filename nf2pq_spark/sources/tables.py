@@ -79,15 +79,21 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 _SCHEMA_CACHE: dict[str, tuple] = {}
 
 
+def _raise(exc: OSError) -> None:
+    raise exc
+
+
 def _path_signature(path: str):
     """Cheap change-detection signature for a parquet file or directory
     (recursive — covers partition subdirectories); None (→ no caching)
-    when the path cannot be stat'ed."""
+    when the path or any directory under it cannot be stat'ed or listed.
+    ``os.walk`` silently skips a directory it cannot list, which would
+    memoize a signature of a partial listing, so its errors raise."""
     try:
         st = os.stat(path)
         if _stat.S_ISDIR(st.st_mode):
             sig = []
-            for root, _dirs, files in os.walk(path):
+            for root, _dirs, files in os.walk(path, onerror=_raise):
                 rel = os.path.relpath(root, path)
                 for f in files:
                     fst = os.stat(os.path.join(root, f))

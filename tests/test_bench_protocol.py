@@ -313,3 +313,16 @@ def test_composed_multijvm_spill_profile_wiring():
     src = inspect.getsource(hcs.run_profile)
     assert '"local_cluster_spill"' in src.split("check_spill")[1].split(
         "\n")[0]
+
+
+def test_phase_probe_rejects_missing_or_unknown_probe():
+    """tools/phase_probe.py exits with its usage text, not an
+    IndexError/KeyError traceback, when the probe name is missing or
+    unknown — before it starts a session."""
+    tool = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "phase_probe.py")
+    for argv in ([], ["bogus"]):
+        p = subprocess.run([sys.executable, tool, *argv], capture_output=True,
+                           text=True, timeout=120)
+        assert p.returncode == 1, p.stderr
+        assert "Usage:" in p.stderr and "Traceback" not in p.stderr

@@ -1856,6 +1856,95 @@ def test_cache_lock_serializes_concurrent_rebuilds(tmp_path):
     assert not (cache / ".lock").exists()
 
 
+
+@pytest.fixture
+def fixture_cache(tmp_path):
+    """A one-table source fixture plus a unique materialize_once cache
+    name; removes the /tmp cache and its lock sibling afterwards."""
+    import os
+    import shutil
+    import uuid
+
+    sf = tmp_path / "sf_cache"
+    os.makedirs(sf)
+    (sf / "events.parquet").write_bytes(b"gen1")
+    name = f"test_{uuid.uuid4().hex[:12]}"
+    out = f"/tmp/nf2pq_{name}_sf_cache"
+    yield name, str(sf), out
+    shutil.rmtree(out, ignore_errors=True)
+    if os.path.exists(out + ".lock"):
+        os.remove(out + ".lock")
+
+
+def test_materialize_once_skips_build_when_current(fixture_cache):
+    import os
+
+    from nf2pq_spark.plans.helpers import materialize_once
+
+    name, sf, out = fixture_cache
+    builds = []
+
+    def build(path):
+        builds.append(path)
+        with open(f"{path}/data.bin", "wb") as fh:
+            fh.write(b"x" * 8)
+
+    assert materialize_once(name, sf, ("events",), build) == out
+    assert materialize_once(name, sf, ("events",), build) == out
+    assert builds == [out]
+    assert sorted(os.listdir(out)) == ["_BUILT", "data.bin"]
+    assert os.path.exists(out + ".lock")
+
+
+def test_materialize_once_failed_build_leaves_no_marker(fixture_cache):
+    import os
+
+    from nf2pq_spark.plans.helpers import materialize_once
+
+    name, sf, out = fixture_cache
+
+    def broken(path):
+        with open(f"{path}/partial.bin", "wb") as fh:
+            fh.write(b"half")
+        raise RuntimeError("build died")
+
+    with pytest.raises(RuntimeError, match="build died"):
+        materialize_once(name, sf, ("events",), broken)
+    assert os.listdir(out) == ["partial.bin"]     # no marker vouches for it
+
+    seen = []
+
+    def build(path):
+        seen.append(sorted(os.listdir(path)))     # the partial file is gone
+        with open(f"{path}/data.bin", "wb") as fh:
+            fh.write(b"ok")
+
+    materialize_once(name, sf, ("events",), build)
+    assert seen == [[]]
+    assert sorted(os.listdir(out)) == ["_BUILT", "data.bin"]
+
+
+def test_materialize_once_rebuilds_on_source_change(fixture_cache):
+    import os
+
+    from nf2pq_spark.plans.helpers import materialize_once
+
+    name, sf, out = fixture_cache
+    gen = [0]
+
+    def build(path):
+        gen[0] += 1
+        os.makedirs(f"{path}/sub")
+        with open(f"{path}/sub/gen{gen[0]}.bin", "wb") as fh:
+            fh.write(b"x" * gen[0])
+
+    materialize_once(name, sf, ("events",), build)
+    with open(f"{sf}/events.parquet", "ab") as fh:  # fixture regenerated
+        fh.write(b"gen2")
+    materialize_once(name, sf, ("events",), build)
+    assert gen[0] == 2
+    assert os.listdir(f"{out}/sub") == ["gen2.bin"]  # gen1 did not survive
+
 def test_interval_micros_rejects_malformed_inputs():
     """Every malformed bucket raises the NAMED ValueError — never an
     IndexError from an empty string or a negative width accepted."""

@@ -271,6 +271,21 @@ def test_stream_maintained_rollup_multi_batch(spark, sf_dir):
     assert b == s
 
 
+
+def test_chunked_events_dir_keys_cache_on_chunk_count(spark, sf_dir):
+    """Layouts of different chunk counts are separate caches: a 3-chunk
+    call must not be served to a later 4-chunk call (or vice versa)."""
+    from nf2pq_spark.plans.streaming_q import _chunked_events_dir
+
+    def chunk_dirs(src):
+        return sorted(d for d in os.listdir(src) if d.startswith("chunk="))
+
+    src3 = _chunked_events_dir(spark, sf_dir, n_chunks=3)
+    src4 = _chunked_events_dir(spark, sf_dir, n_chunks=4)
+    assert src3 != src4
+    assert len(chunk_dirs(src3)) == 3
+    assert len(chunk_dirs(src4)) == 4
+
 def test_compact_rollup_preserves_results_and_guards_layout(spark, sf_dir):
     """r4 advice: build_rollup targeting a stream-maintained path would
     leave a mixed-depth partition tree (date= vs date=/batch_id=) that

@@ -54,6 +54,37 @@ def test_nested_directory_rewrite_invalidates(spark, tmp_path):
     assert sig1 != sig2
 
 
+
+def test_unlistable_subdirectory_disables_the_memo(spark, tmp_path,
+                                                   monkeypatch):
+    """os.walk skips a directory it cannot list. A signature built from
+    that partial listing must not fill the memos: the signature is None
+    and the read goes uncached. (chmod cannot model this: the superuser
+    ignores it, so the listing failure is injected.)"""
+    sf = str(tmp_path)
+    path = f"{sf}/events.parquet"
+    (spark.range(10)
+     .select(F.col("id").alias("event_id"), (F.col("id") % 2).alias("part"))
+     .write.partitionBy("part").parquet(path))
+    assert tables._path_signature(path) is not None
+    real_scandir = os.scandir
+    victim = os.path.join(path, "part=1")
+
+    def scandir(p="."):
+        if os.path.abspath(p) == victim:
+            raise PermissionError(13, "Permission denied", p)
+        return real_scandir(p)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    assert tables._path_signature(path) is None
+    tables._SCHEMA_CACHE.pop(path, None)
+    getattr(spark, tables._FRAME_ATTR, {}).pop(path, None)
+    df = tables.read_parquet_cached_schema(spark, path)
+    assert sorted(df.columns) == ["event_id", "part"]
+    assert path not in tables._SCHEMA_CACHE
+    load_table(spark, sf, "events")
+    assert path not in getattr(spark, tables._FRAME_ATTR, {})
+
 def test_ensure_session_conf_memoized_and_idempotent(spark):
     ensure_session_conf(spark)
     assert getattr(spark, "_nf2pq_conf_applied", False)

@@ -77,6 +77,9 @@ def probe_s6(spark, sf_dir):
 
 
 def main():
+    probes = {"g3": probe_g3, "l25": probe_l25, "s6": probe_s6}
+    if len(sys.argv) < 2 or sys.argv[1] not in probes:
+        sys.exit(__doc__)
     which = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -85,7 +88,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     load_table(spark, sf_dir, "lineitem").count()  # warm listings/JIT
     print(f"probe {which} @ {sf_dir}")
-    {"g3": probe_g3, "l25": probe_l25, "s6": probe_s6}[which](spark, sf_dir)
+    probes[which](spark, sf_dir)
 
 
 if __name__ == "__main__":
