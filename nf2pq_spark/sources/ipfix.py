@@ -7,12 +7,14 @@ binary, NetFlow v9/IPFIX records are decoded against in-band templates
 (the nfdump-lineage field set — SURVEY §1.1).
 
 Spark has no UDP source, so the architecture is: a datagram bridge persists
-raw datagrams to files (or Kafka), `spark.read(.readStream).format
-("binaryFile")` picks them up, and :func:`decode_flows` — a ``mapInPandas``
-whole-partition decoder — unpacks them into typed rows. The template cache
-for IPFIX lives per Python worker, keyed (exporter, template id); exporters
-should be the file-partition key so templates stay local (repartition by
-exporter path prefix upstream at scale).
+raw datagrams to files (or Kafka), :func:`read_flow_files` (batch) or
+:func:`stream_flow_files` (one ``foreachBatch`` per micro-batch) picks them
+up with ``binaryFile``, and both hand the ``(path, content)`` frame to
+:func:`decode_datagram_frame`. That two-phase decode first harvests the
+batch's template sets and merges them, keyed (exporter, template id),
+then runs the ``mapInPandas`` decoder with the merged templates, so rows
+decode wherever they land: no per-worker template state and no
+partitioning by exporter.
 
 Decoding is pure ``struct`` unpacking (PySpark 4.1.2 has no ``F.from_binary``
 — verified), Arrow-batched, linear in bytes: the 100 TB path is "many files,

@@ -93,8 +93,18 @@ def test_ensure_session_conf_memoized_and_idempotent(spark):
     assert spark.conf.get(
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == \
         RUNTIME_CONF["spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"]
-    # second call is a no-op (the memo short-circuits before any py4j)
+    # second call is a no-op (the memo short-circuits after one conf read)
     assert ensure_session_conf(spark) is spark
+
+
+def test_ensure_session_conf_repins_a_drifted_time_zone(spark):
+    ensure_session_conf(spark)
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        ensure_session_conf(spark)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def test_frame_memo_lives_on_the_session(spark, tmp_path):
