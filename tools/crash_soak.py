@@ -28,7 +28,7 @@ batch decode of the committed capture files:
 
 Child modes (each its own process group so kill -9 takes the JVM too):
 
-    crash_soak.py --bridge OUT_DIR PORT ROTATE_S   # until SIGTERM
+    crash_soak.py --bridge OUT_DIR PORT ROTATE_S [READY_FILE]  # until SIGTERM
     crash_soak.py --drain CAP_DIR PQ_DIR CKPT      # one availableNow drain
     crash_soak.py --rollup PQ_DIR ROLLUP_DIR CKPT  # one rollup maintenance run
     crash_soak.py --compact ROLLUP_DIR             # one compaction
@@ -58,15 +58,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # child modes
 # --------------------------------------------------------------------------
 
-def _child_bridge(out_dir: str, port: int, rotate_s: float) -> None:
+def _child_bridge(out_dir: str, port: int, rotate_s: float,
+                  ready_file: str | None = None) -> None:
     """Run the UDP bridge until SIGTERM (graceful: finalizes open files).
     SIGKILL — the soak's crash injection — leaves the in-flight .tmp
-    behind, which must stay invisible to every reader."""
+    behind, which must stay invisible to every reader. ``ready_file``
+    is created once the socket is bound."""
     from nf2pq_spark.sources.udp_bridge import UdpCaptureBridge
 
     bridge = UdpCaptureBridge("127.0.0.1", port, out_dir,
                               rotate_seconds=rotate_s)
     bridge.start()
+    if ready_file:
+        open(ready_file, "w").close()
     stop = []
     signal.signal(signal.SIGTERM, lambda *_: stop.append(1))
     while not stop:
@@ -168,6 +172,21 @@ def _run_to_completion(args: list[str], timeout: float = 300.0) -> None:
         raise RuntimeError(f"clean run {args} exited {rc}")
 
 
+def _wait_ready(p: subprocess.Popen, ready_file: str,
+                timeout: float = 60.0) -> None:
+    """Block until child ``p`` creates ``ready_file``. The bridge child
+    spends ~0.8 s importing before it binds (longer on a loaded host),
+    so traffic sent on a fixed sleep mostly hit a closed port."""
+    deadline = time.monotonic() + timeout
+    while not os.path.exists(ready_file):
+        if p.poll() is not None:
+            raise RuntimeError(f"child exited {p.returncode} before ready")
+        if time.monotonic() > deadline:
+            _kill9(p)
+            raise TimeoutError(f"child not ready after {timeout:.0f}s")
+        time.sleep(0.01)
+
+
 def _free_port() -> int:
     s = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
     s.bind(("127.0.0.1", 0))
@@ -214,8 +233,9 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
     per_cycle = datagrams // cycles
     sent = 0
     for c in range(cycles):
-        bridge = _spawn(["--bridge", cap, str(port), "0.25"])
-        time.sleep(0.5)  # let it bind
+        ready = os.path.join(workdir, f"bridge_{c}.ready")
+        bridge = _spawn(["--bridge", cap, str(port), "0.25", ready])
+        _wait_ready(bridge, ready)
         _send_flows(port, sent, per_cycle, base_ms, rate_per_s)
         sent += per_cycle
         if c < cycles - 1:
@@ -318,7 +338,8 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
 def main() -> int:
     args = sys.argv[1:]
     if args and args[0] == "--bridge":
-        _child_bridge(args[1], int(args[2]), float(args[3]))
+        _child_bridge(args[1], int(args[2]), float(args[3]),
+                      args[4] if len(args) > 4 else None)
         return 0
     if args and args[0] == "--drain":
         _child_drain(args[1], args[2], args[3])
