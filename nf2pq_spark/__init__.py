@@ -38,10 +38,12 @@ class _DropZipSubpackageImporters:
     ``PathFinder`` re-reads what is left: the archive-root importers
     (empty prefix), once per archive, so a changed archive is still
     picked up. A later sub-package import rebuilds its importer from
-    zipimport's directory cache without a re-read. Dropping once at
-    import is not enough: a worker that imports a new pyspark
-    sub-package afterwards caches prefixed importers again. A no-op
-    when pyspark comes from site-packages (the driver).
+    zipimport's directory cache without a re-read. Dropping on every
+    invalidation, not once, matters: a worker that imports a new pyspark
+    sub-package afterwards caches prefixed importers again. The package
+    is imported during a task, so the next task's invalidation is the
+    first to drop. A no-op when pyspark comes from site-packages (the
+    driver).
     """
 
     @classmethod
@@ -55,5 +57,4 @@ class _DropZipSubpackageImporters:
                 sys.path_importer_cache.pop(path, None)
 
 
-_DropZipSubpackageImporters.invalidate_caches()
 sys.meta_path.insert(0, _DropZipSubpackageImporters)

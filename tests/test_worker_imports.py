@@ -1,8 +1,8 @@
 """Python workers import pyspark from ``$SPARK_HOME/python/lib/pyspark.zip``
 and start every task with ``importlib.invalidate_caches()``, which makes
 each cached ``zipimporter`` re-read the whole archive directory. Importing
-``nf2pq_spark`` drops the per-sub-package importers (non-empty prefix),
-then and on every later invalidation, so that call re-reads each archive
+``nf2pq_spark`` makes every later invalidation drop the per-sub-package
+importers (non-empty prefix) first, so that call re-reads each archive
 once; these tests pin that the drop happens, keeps the archive roots,
 leaves later imports working, and holds for reused Spark workers.
 """
@@ -38,6 +38,7 @@ def prefixed():
 
 before = prefixed()
 import nf2pq_spark  # noqa: F401
+importlib.invalidate_caches()
 after = prefixed()
 roots = sorted(f.archive for f in zip_importers().values() if not f.prefix)
 assert "pyspark.ml.linalg" not in sys.modules

@@ -28,7 +28,7 @@ batch decode of the committed capture files:
 
 Child modes (each its own process group so kill -9 takes the JVM too):
 
-    crash_soak.py --bridge OUT_DIR PORT ROTATE_S [READY_FILE]  # until SIGTERM
+    crash_soak.py --bridge OUT_DIR PORT ROTATE_S READY_FILE  # until SIGTERM
     crash_soak.py --drain CAP_DIR PQ_DIR CKPT      # one availableNow drain
     crash_soak.py --rollup PQ_DIR ROLLUP_DIR CKPT  # one rollup maintenance run
     crash_soak.py --compact ROLLUP_DIR             # one compaction
@@ -59,7 +59,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # --------------------------------------------------------------------------
 
 def _child_bridge(out_dir: str, port: int, rotate_s: float,
-                  ready_file: str | None = None) -> None:
+                  ready_file: str) -> None:
     """Run the UDP bridge until SIGTERM (graceful: finalizes open files).
     SIGKILL — the soak's crash injection — leaves the in-flight .tmp
     behind, which must stay invisible to every reader. ``ready_file``
@@ -69,8 +69,7 @@ def _child_bridge(out_dir: str, port: int, rotate_s: float,
     bridge = UdpCaptureBridge("127.0.0.1", port, out_dir,
                               rotate_seconds=rotate_s)
     bridge.start()
-    if ready_file:
-        open(ready_file, "w").close()
+    open(ready_file, "w").close()
     stop = []
     signal.signal(signal.SIGTERM, lambda *_: stop.append(1))
     while not stop:
@@ -338,8 +337,7 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
 def main() -> int:
     args = sys.argv[1:]
     if args and args[0] == "--bridge":
-        _child_bridge(args[1], int(args[2]), float(args[3]),
-                      args[4] if len(args) > 4 else None)
+        _child_bridge(args[1], int(args[2]), float(args[3]), args[4])
         return 0
     if args and args[0] == "--drain":
         _child_drain(args[1], args[2], args[3])
