@@ -31,9 +31,10 @@ Format is INI (stdlib configparser — no new dependencies):
 
 The pipeline is the §3.3 architecture: UDP bridge → capture files →
 ``readStream.format("binaryFile")`` → two-phase template decode →
-fan-out (partitioned Parquet append + optional ClickHouse JDBC insert),
-all inside one ``foreachBatch`` so each micro-batch is decoded once and
-written to both sinks.
+partitioned Parquet (written by the decode task itself on a local
+filesystem) → optional ClickHouse JDBC insert read back from that
+batch's Parquet, all inside one ``foreachBatch`` so each micro-batch is
+decoded once and written to both sinks.
 """
 
 from __future__ import annotations
@@ -122,30 +123,56 @@ def run_collector(spark: SparkSession, cfg: CollectorConfig,
     existing capture backlog and stops (operationally: catch-up/backfill
     mode; also how tests run it hermetically).
 
+    Each micro-batch lands in its own ``batch_id=N`` directory with
+    ``date=…/hour=…`` (session time zone) nested inside: pruning on
+    date/hour works across batch dirs, and
+    ``streaming.sinks.compact_partitions`` folds the batch dirs away on
+    the maintenance path (it repartitions to (date, hour); batch_id
+    becomes a plain column in the compacted copy).
+
+    Where the Parquet is written depends on the target, resolved as
+    Spark resolves it (the path's scheme, else ``fs.defaultFS``; see
+    :func:`streaming.sinks.local_target`):
+
+    - LOCAL FILESYSTEM: the phase-2 decode task writes the files itself
+      (:func:`streaming.sinks.task_parquet_batch_writer`), so decoded
+      rows never cross back into the JVM; only a manifest row per file
+      does.
+    - ANY OTHER SCHEME: the decoded frame goes to Spark's writer
+      (:func:`streaming.sinks.idempotent_parquet_batch_writer`,
+      mode=overwrite on ``batch_id=N``).
+
     The PARQUET leg is REPLAY-IDEMPOTENT (r8 crash soak): foreachBatch
     commits the checkpoint AFTER the sink runs, so a kill between the
     parquet write and the checkpoint commit redelivers the batch on
-    restart — a blind ``mode("append")`` then duplicated every row of
-    the replayed batch (the soak reproduced this immediately). Each
-    batch lands via
-    :func:`streaming.sinks.idempotent_parquet_batch_writer` (its own
-    ``batch_id=N`` dir, mode=overwrite, date/hour nested inside): a
-    replay replaces itself; pruning on date/hour works across batch
-    dirs, and ``streaming.sinks.compact_partitions`` folds the batch
-    dirs away on the maintenance path (note it repartitions to
-    (date, hour) — batch_id becomes a plain column in the compacted
-    copy). The CLICKHOUSE leg delegates replay-safety to the SERVER:
-    every INSERT carries a stable per-batch
-    ``insert_deduplication_token`` (see
-    :func:`streaming.sinks.jdbc_batch_writer`), so a redelivered batch
-    is dropped as a duplicate block — PROVIDED the target table meets
-    the dedup prerequisites in that docstring; no ClickHouse server
-    exists in this environment, so the token construction is
+    restart, and a blind append would duplicate every row of it. So a
+    batch first clears its ``batch_id=N`` directory, then writes files
+    with deterministic names (``part-<partition>…``) that a task attempt
+    publishes by an atomic rename from a dot-prefixed tmp name carrying
+    its attempt number: a redelivered batch or a retried task replaces
+    its own files, and no reader sees a partial one. The rename is why
+    the in-task writer is for local filesystems only; elsewhere Spark's
+    commit protocol keeps that role.
+
+    The CLICKHOUSE leg reads the batch's committed ``batch_id=N`` files
+    back and ships the pinned columns, so each batch is decoded once on
+    either writer path. It delegates replay-safety to the SERVER: every
+    INSERT carries a stable per-batch ``insert_deduplication_token``
+    (see :func:`streaming.sinks.jdbc_batch_writer`), so a redelivered
+    batch is dropped as a duplicate block — PROVIDED the target table
+    meets the dedup prerequisites in that docstring; no ClickHouse
+    server exists in this environment, so the token construction is
     unit-verified and the crash soak verifies the parquet leg only."""
-    from .sources.ipfix import stream_flow_files
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    from .sources.ipfix import (FLOW_SCHEMA, FLOW_STR_SCHEMA,
+                                decode_datagram_frame, seeded_decoder,
+                                stream_capture_files)
     from .streaming.sinks import (_checkpoint_dedup_salt,
                                   idempotent_parquet_batch_writer,
-                                  jdbc_batch_writer, with_partition_columns)
+                                  jdbc_batch_writer, local_target,
+                                  task_parquet_batch_writer,
+                                  with_partition_columns)
 
     # token prefix salted per checkpoint lineage — a second pipeline
     # inserting into the same table, or a restart after a checkpoint
@@ -159,8 +186,29 @@ def run_collector(spark: SparkSession, cfg: CollectorConfig,
                               f"{_checkpoint_dedup_salt(cfg.checkpoint)}"))
         if cfg.clickhouse else None
     )
-    pq_writer = idempotent_parquet_batch_writer(
-        cfg.parquet_path, partition_by=["date", "hour"])
+    # the written columns: the decoded surface plus ts
+    written = StructType(
+        (FLOW_STR_SCHEMA if cfg.decode_strings else FLOW_SCHEMA).fields
+        + [StructField("ts", TimestampType())])
+    local = local_target(
+        cfg.parquet_path,
+        spark._jsparkSession.sessionState().newHadoopConf().get(
+            "fs.defaultFS"))
+    if local is not None:
+        task_writer = task_parquet_batch_writer(local, written)
+
+        def write_parquet(raw: DataFrame, batch_id: int) -> None:
+            task_writer(raw, seeded_decoder(raw, cfg.decode_strings),
+                        batch_id)
+    else:
+        spark_writer = idempotent_parquet_batch_writer(
+            cfg.parquet_path, partition_by=["date", "hour"])
+
+        def write_parquet(raw: DataFrame, batch_id: int) -> None:
+            typed = decode_datagram_frame(
+                raw, with_strings=cfg.decode_strings).withColumn(
+                    "ts", F.timestamp_millis(F.col("ts_ms")))
+            spark_writer(with_partition_columns(typed, "ts"), batch_id)
 
     # The ClickHouse insert column set is PINNED, never derived from
     # which decode options are on: dropping complex columns by TYPE
@@ -171,11 +219,7 @@ def run_collector(spark: SparkSession, cfg: CollectorConfig,
     # shipping more (app_name after migrating the server table) is an
     # explicit `columns = ...` line in [clickhouse]. Validated here,
     # at stream build, not per batch.
-    from .sources.ipfix import FLOW_SCHEMA, FLOW_STR_SCHEMA
-
-    available = [f.name for f in
-                 (FLOW_STR_SCHEMA if cfg.decode_strings
-                  else FLOW_SCHEMA).fields] + ["ts"]
+    available = written.fieldNames()
     ch_cols = (list(cfg.clickhouse.columns) if cfg.clickhouse
                and cfg.clickhouse.columns
                else [f.name for f in FLOW_SCHEMA.fields] + ["ts"])
@@ -194,21 +238,21 @@ def run_collector(spark: SparkSession, cfg: CollectorConfig,
                 f"[clickhouse] columns include map/array types the JDBC "
                 f"sink cannot insert: {complex_named}")
 
-    def deliver(flows: DataFrame, batch_id: int) -> None:
-        typed = flows.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-        pq_writer(with_partition_columns(typed, "ts"), batch_id)
+    def deliver(raw: DataFrame, batch_id: int) -> None:
+        write_parquet(raw, batch_id)
         if ch_writer is not None:
             # the parquet leg keeps the full surface; the ClickHouse
             # leg ships exactly the pinned columns (the JDBC sink also
             # has no type mapping for map/array columns — a pinned list
             # naming one fails the build-time check against the DDL'd
             # table rather than killing micro-batches)
-            ch_writer(typed.select(*ch_cols), batch_id)
+            batch = raw.sparkSession.read.schema(written).parquet(
+                f"{cfg.parquet_path}/batch_id={int(batch_id)}")
+            ch_writer(batch.select(*ch_cols), batch_id)
 
-    return stream_flow_files(
+    return stream_capture_files(
         spark, capture_source_glob(cfg.capture_dir), deliver, cfg.checkpoint,
-        available_now=available_now, with_strings=cfg.decode_strings,
-    )
+        available_now=available_now)
 
 
 def capture_source_glob(path: str) -> str:

@@ -11,10 +11,17 @@ raw datagrams to files (or Kafka), :func:`read_flow_files` (batch) or
 :func:`stream_flow_files` (one ``foreachBatch`` per micro-batch) picks them
 up with ``binaryFile``, and both hand the ``(path, content)`` frame to
 :func:`decode_datagram_frame`. That two-phase decode first harvests the
-batch's template sets and merges them, keyed (exporter, template id),
-then runs the ``mapInPandas`` decoder with the merged templates, so rows
-decode wherever they land: no per-worker template state and no
-partitioning by exporter.
+batch's template sets and merges them, keyed (exporter, template id)
+(:func:`seeded_decoder`), then runs the ``mapInPandas`` decoder with the
+merged templates, so rows decode wherever they land: no per-worker
+template state and no partitioning by exporter.
+
+The collector (:func:`nf2pq_spark.config.run_collector`) streams raw
+batches (:func:`stream_capture_files`) and, on a local-filesystem
+target, runs the seeded decoder inside the task that writes the
+batch's Parquet (``streaming.sinks.task_parquet_batch_writer``), so its
+decoded rows never return to the JVM; other targets get the
+:func:`decode_datagram_frame` frame and Spark's writer.
 
 Decoding is pure ``struct`` unpacking (PySpark 4.1.2 has no ``F.from_binary``
 — verified), Arrow-batched, linear in bytes: the 100 TB path is "many files,
@@ -2100,15 +2107,13 @@ def _seeded_boot_harvest(opt_seed: dict):
     return _make_template_harvester(opt_seed, include_templates=False)
 
 
-def decode_datagram_frame(raw: DataFrame,
-                          with_strings: bool = False) -> DataFrame:
-    """Two-phase decode of a bounded ``(path, content)`` DataFrame: phase
-    1 harvests template sets and IE 160 boot epochs (tiny: a few rows
-    per exporter) and ships the merged caches into the phase-2 decoder
-    closure. This removes all ordering/partitioning assumptions — rows
-    land in any partition, templates still resolve — which is the
-    property a 1000-executor scan needs. The per-micro-batch building
-    block shared by every front-end (files, streams, Kafka).
+def seeded_decoder(raw: DataFrame, with_strings: bool = False):
+    """Phase 1 of the two-phase decode of a bounded ``(path, content)``
+    DataFrame: harvest template sets and IE 160 boot epochs (tiny: a few
+    rows per exporter) and return the phase-2 ``mapInPandas`` body
+    (:func:`make_decoder`) seeded with the merged caches. Rows then
+    decode in any partition with templates still resolved — the
+    property a 1000-executor scan needs.
 
     When the merged options templates show an IE 160 era clock is in
     play, a seeded second boot-harvest scan closes phase 1's
@@ -2123,11 +2128,21 @@ def decode_datagram_frame(raw: DataFrame,
            for fields in opt_tmpls.values()):
         boot_src = tmpl_rows + raw.mapInPandas(
             _seeded_boot_harvest(opt_tmpls), _TEMPLATE_SCHEMA).collect()
-    return raw.mapInPandas(
-        make_decoder(_merge_template_rows(tmpl_rows),
-                     _merge_boot_rows(boot_src),
-                     with_strings=with_strings),
-        FLOW_STR_SCHEMA if with_strings else FLOW_SCHEMA)
+    return make_decoder(_merge_template_rows(tmpl_rows),
+                        _merge_boot_rows(boot_src),
+                        with_strings=with_strings)
+
+
+def decode_datagram_frame(raw: DataFrame,
+                          with_strings: bool = False) -> DataFrame:
+    """Two-phase decode of a bounded ``(path, content)`` DataFrame into
+    the typed flow frame: phase 1 (:func:`seeded_decoder`) runs now,
+    phase 2 runs wherever the returned DataFrame is evaluated. The
+    per-micro-batch building block shared by the batch reader, streams
+    and Kafka; the collector instead runs the seeded body inside its
+    Parquet-writing task (:func:`nf2pq_spark.config.run_collector`)."""
+    return raw.mapInPandas(seeded_decoder(raw, with_strings),
+                           FLOW_STR_SCHEMA if with_strings else FLOW_SCHEMA)
 
 
 def read_flow_files(spark, path: str, with_strings: bool = False) -> DataFrame:
@@ -2141,6 +2156,27 @@ def read_flow_files(spark, path: str, with_strings: bool = False) -> DataFrame:
     """
     raw = spark.read.format("binaryFile").load(path).select("path", "content")
     return decode_datagram_frame(raw, with_strings=with_strings)
+
+
+def stream_capture_files(spark, path: str, process, checkpoint: str,
+                         available_now: bool = True):
+    """Capture files as a stream of raw micro-batches:
+    ``process(raw_df, batch_id)`` receives each batch's ``(path,
+    content)`` frame inside ``foreachBatch``, and the checkpoint commits
+    after it returns."""
+
+    def raw_batch(batch_df: DataFrame, batch_id: int) -> None:
+        process(batch_df.select("path", "content"), batch_id)
+
+    stream = (spark.readStream.format("binaryFile")
+              .schema("path string, modificationTime timestamp, length long, "
+                      "content binary")
+              .load(path))
+    writer = (stream.writeStream.foreachBatch(raw_batch)
+              .option("checkpointLocation", checkpoint))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_flow_files(spark, path: str, process, checkpoint: str,
@@ -2160,17 +2196,9 @@ def stream_flow_files(spark, path: str, process, checkpoint: str,
     not reach the varlen columns at all).
     """
 
-    def decode_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process(decode_datagram_frame(batch_df.select("path", "content"),
-                                      with_strings=with_strings),
+    def decode_batch(raw: DataFrame, batch_id: int) -> None:
+        process(decode_datagram_frame(raw, with_strings=with_strings),
                 batch_id)
 
-    stream = (spark.readStream.format("binaryFile")
-              .schema("path string, modificationTime timestamp, length long, "
-                      "content binary")
-              .load(path))
-    writer = (stream.writeStream.foreachBatch(decode_batch)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_capture_files(spark, path, decode_batch, checkpoint,
+                                available_now=available_now)

@@ -3,7 +3,11 @@
 
 from __future__ import annotations
 
+import glob
 import os
+import re
+
+import pytest
 
 from nf2pq_spark.config import load_config, run_collector
 
@@ -444,3 +448,283 @@ columns = {cols}
     cfg_off = type(cfg_off)(**{**cfg_off.__dict__, "decode_strings": False})
     with pytest.raises(ValueError, match="not in the decoded surface"):
         run_collector(spark, cfg_off, available_now=True)
+
+
+def _v5_capture(cap, n: int = 4) -> None:
+    """One v5 capture file of ``n`` flows, one per hour, sp = 0..n-1."""
+    from nf2pq_spark.sources.ipfix import encode_netflow_v5, write_capture_file
+
+    os.makedirs(cap)
+    base_ms = 90_000_000  # v5 carries uint32 ms on the wire
+    flows = [{"sa_int": (10 << 24) + i, "da_int": 2, "sp": i, "dp": 80,
+              "pr": 6, "flg": 16, "ipkt": 1, "ibyt": 100,
+              "ts_ms": base_ms + i * 3_600_000,
+              "te_ms": base_ms + i * 3_600_000 + 500, "sas": 0, "das": 0}
+             for i in range(n)]
+    write_capture_file(str(cap / "cap_0.bin"), encode_netflow_v5(flows))
+
+
+def _drain(spark, tmp_path, cap, **kw):
+    from nf2pq_spark.config import CollectorConfig
+
+    q = run_collector(spark, CollectorConfig(
+        capture_dir=str(cap), parquet_path=str(tmp_path / "flows"),
+        checkpoint=str(tmp_path / "ckpt"), **kw), available_now=True)
+    q.awaitTermination()
+    assert q.exception() is None
+    return str(tmp_path / "flows")
+
+
+def _parquet_files(out: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(out, "batch_id=*", "date=*",
+                                         "hour=*", "*")))
+
+
+def test_clickhouse_leg_reuses_the_batch_decode(spark, tmp_path,
+                                                monkeypatch):
+    """With [clickhouse] set, each batch runs the phase-2 decoder once:
+    the ClickHouse leg reads the batch's committed Parquet back instead
+    of evaluating the lazy decoded frame a second time."""
+    from nf2pq_spark.sources import ipfix
+    from nf2pq_spark.streaming import sinks as sinks_mod
+
+    runs = str(tmp_path / "decoder_runs")
+    os.makedirs(runs)
+    make_decoder = ipfix.make_decoder
+
+    def counting_make_decoder(*a, **kw):
+        decode = make_decoder(*a, **kw)
+
+        def counted(batches):
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            open(os.path.join(runs, f"{ctx.stageId()}-{ctx.partitionId()}-"
+                                    f"{ctx.attemptNumber()}"), "w").close()
+            yield from decode(batches)
+
+        return counted
+
+    shipped = []
+
+    def fake_jdbc_writer(url, table, properties=None,
+                         dedup_token_prefix=None):
+        def write_batch(batch_df, batch_id):
+            shipped.append((batch_id, sorted(r.sp for r in batch_df.collect())))
+        return write_batch
+
+    monkeypatch.setattr(ipfix, "make_decoder", counting_make_decoder)
+    monkeypatch.setattr(sinks_mod, "jdbc_batch_writer", fake_jdbc_writer)
+    cap = tmp_path / "caps"
+    _v5_capture(cap)
+    conf = tmp_path / "nf2pq.conf"
+    conf.write_text("""
+[collector]
+capture_dir = {cap}
+
+[parquet]
+path = {out}
+checkpoint = {ckpt}
+
+[clickhouse]
+url = jdbc:clickhouse://nowhere:8123/flows
+table = flows
+""".format(cap=cap, out=tmp_path / "flows", ckpt=tmp_path / "ckpt"))
+    q = run_collector(spark, load_config(str(conf)), available_now=True)
+    q.awaitTermination()
+
+    assert shipped == [(0, [0, 1, 2, 3])]
+    stages = {name.split("-")[0] for name in os.listdir(runs)}
+    assert len(stages) == 1, f"phase-2 decode ran in stages {sorted(stages)}"
+
+
+_FLOW_PHYSICAL = [
+    ("ts_ms", "INT64"), ("te_ms", "INT64"), ("sa", "BYTE_ARRAY"),
+    ("da", "BYTE_ARRAY"), ("sp", "INT32"), ("dp", "INT32"), ("pr", "INT32"),
+    ("flg", "INT32"), ("ipkt", "INT64"), ("ibyt", "INT64"), ("sas", "INT32"),
+    ("das", "INT32"), ("exporter", "BYTE_ARRAY")]
+_STR_PHYSICAL = [
+    ("app_name", "BYTE_ARRAY"), ("str_ies.key_value.key", "INT32"),
+    ("str_ies.key_value.value", "BYTE_ARRAY"),
+    ("list_ies.key_value.key", "INT32"),
+    ("list_ies.key_value.value.list.element", "INT64")]
+_FLOW_READ = ("ts_ms:bigint,te_ms:bigint,sa:string,da:string,sp:int,dp:int,"
+              "pr:int,flg:int,ipkt:bigint,ibyt:bigint,sas:int,das:int,"
+              "exporter:string")
+_STR_READ = ("app_name:string,str_ies:map<int,string>,"
+             "list_ies:map<int,array<bigint>>")
+
+
+@pytest.mark.parametrize("decode_strings", [False, True])
+def test_collector_files_keep_the_spark_layout(spark, tmp_path,
+                                               decode_strings):
+    """The collector's files read back with the schema Spark's writer
+    gave them, and every file keeps Spark's Parquet physical types
+    (``ts`` INT96), snappy compression and deterministic names."""
+    import pyarrow.parquet as pq
+
+    from nf2pq_spark.sources.ipfix import (_VARLEN, encode_basiclist,
+                                           encode_ipfix, write_capture_file)
+
+    cap = tmp_path / "caps"
+    os.makedirs(cap)
+    fields = [(8, 4), (12, 4), (7, 2), (11, 2), (4, 1),
+              (96, _VARLEN), (6, 1), (2, 4), (291, _VARLEN),
+              (1, 4), (152, 8), (153, 8), (16, 4), (17, 4)]
+    flows = [{"sa_int": 10 + i, "da_int": 2, "sp": i, "dp": 80, "pr": 6,
+              "flg": 16, "app": f"svc{i}",
+              "blist": encode_basiclist(7, 2, [i, i + 1]), "ipkt": 1,
+              "ibyt": 100, "ts_ms": 1_700_000_000_000 + i * 1_000_000,
+              "te_ms": 1_700_000_000_500, "sas": 0, "das": 0}
+             for i in range(8)]
+    write_capture_file(str(cap / "cap_0.bin"),
+                       encode_ipfix(flows, template_fields=fields,
+                                    template_id=353))
+    out = _drain(spark, tmp_path, cap, decode_strings=decode_strings)
+
+    read = _FLOW_READ + ("," + _STR_READ if decode_strings else "")
+    assert spark.read.parquet(out).schema.simpleString() == (
+        f"struct<{read},ts:timestamp,batch_id:int,date:date,hour:int>")
+    physical = (_FLOW_PHYSICAL + (_STR_PHYSICAL if decode_strings else [])
+                + [("ts", "INT96")])
+    files = _parquet_files(out)
+    assert len(files) == 3  # hours 22 and 23 UTC, then 0 the next day
+    for path in files:
+        assert re.fullmatch(r"part-\d{5}\.c000\.snappy\.parquet",
+                            os.path.basename(path)), path
+        meta = pq.ParquetFile(path).metadata
+        assert [(meta.schema.column(i).path,
+                 meta.schema.column(i).physical_type)
+                for i in range(meta.num_columns)] == physical
+        assert {meta.row_group(g).column(i).compression
+                for g in range(meta.num_row_groups)
+                for i in range(meta.num_columns)} == {"SNAPPY"}
+    assert not glob.glob(os.path.join(out, "**", "_SUCCESS"),
+                         recursive=True)
+    rows = spark.read.parquet(out).orderBy("sp").collect()
+    assert [r.sp for r in rows] == list(range(8))
+    if decode_strings:
+        assert rows[3].str_ies == {96: "svc3"}
+        assert rows[3].list_ies == {7: [3, 4]}
+
+
+@pytest.mark.parametrize("zone", ["Asia/Kolkata", "+05:30"])
+def test_collector_partitions_in_the_session_time_zone(spark, tmp_path,
+                                                       zone):
+    """date=/hour= follow ``with_partition_columns`` in a session time
+    zone with a half-hour offset (a region or a fixed offset), across a
+    local midnight."""
+    from nf2pq_spark.sources.ipfix import encode_ipfix, write_capture_file
+    from nf2pq_spark.streaming.sinks import with_partition_columns
+
+    cap = tmp_path / "caps"
+    os.makedirs(cap)
+    t0 = 1_700_071_200_000  # 2023-11-15T18:00Z, 23:30 at +05:30
+    flows = [{"sa_int": 10, "da_int": 2, "sp": i, "dp": 80, "pr": 6,
+              "flg": 16, "ipkt": 1, "ibyt": 100,
+              "ts_ms": t0 + i * 20 * 60_000, "te_ms": t0 + i * 20 * 60_000,
+              "sas": 0, "das": 0} for i in range(9)]
+    write_capture_file(str(cap / "cap_0.bin"), encode_ipfix(flows))
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        out = spark.read.parquet(_drain(spark, tmp_path, cap))
+        got = sorted(map(tuple, out.select("sp", "date", "hour").collect()))
+        want = sorted(map(tuple, with_partition_columns(
+            out.drop("batch_id", "date", "hour"), "ts")
+            .select("sp", "date", "hour").collect()))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    assert got == want
+    assert len({(d, h) for _sp, d, h in got}) == 4
+    assert len({d for _sp, d, _h in got}) == 2
+
+
+def test_redelivered_batch_replaces_its_directory(spark, tmp_path):
+    """A batch redelivered after a crash between its write and its
+    checkpoint commit clears ``batch_id=N`` first: a stray file planted
+    there is gone, and every flow appears exactly once."""
+    import shutil
+
+    cap = tmp_path / "caps"
+    _v5_capture(cap)
+    out = _drain(spark, tmp_path, cap)
+    first = _parquet_files(out)
+    stray = os.path.join(os.path.dirname(first[0]),
+                         "part-09999.c000.snappy.parquet")
+    shutil.copy(first[0], stray)
+    # the batch ran, but its commit never landed
+    for name in ("0", ".0.crc"):
+        path = tmp_path / "ckpt" / "commits" / name
+        if path.exists():
+            path.unlink()
+    _drain(spark, tmp_path, cap)
+
+    assert not os.path.exists(stray)
+    assert _parquet_files(out) == first
+    assert sorted(os.listdir(out)) == ["batch_id=0"]
+    sps = [r.sp for r in spark.read.parquet(out).select("sp").collect()]
+    assert sorted(sps) == [0, 1, 2, 3]
+
+
+def test_collector_keeps_the_spark_writer_off_the_local_filesystem(
+        spark, tmp_path, monkeypatch):
+    """Only a target that resolves to the local filesystem gets the
+    in-task writer; the decision reads the path and ``fs.defaultFS``
+    and contacts nothing."""
+    from nf2pq_spark.config import CollectorConfig
+    from nf2pq_spark.streaming import sinks
+
+    assert sinks.local_target("hdfs://nn/x", "file:///") is None
+    assert sinks.local_target("/data/x", "hdfs://nn:8020") is None
+    assert sinks.local_target("file:/data/x", "hdfs://nn:8020") == "/data/x"
+    assert sinks.local_target("file:///data/x", "file:///") == "/data/x"
+    assert sinks.local_target("rel/x", "file:///") == os.path.abspath("rel/x")
+
+    chosen = []
+
+    def spark_writer(base, partition_by=None):
+        chosen.append(base)
+        return lambda df, batch_id: None
+
+    def task_writer(*a, **kw):
+        raise AssertionError("in-task writer chosen for a remote target")
+
+    monkeypatch.setattr(sinks, "idempotent_parquet_batch_writer",
+                        spark_writer)
+    monkeypatch.setattr(sinks, "task_parquet_batch_writer", task_writer)
+    os.makedirs(tmp_path / "caps")
+    q = run_collector(spark, CollectorConfig(
+        capture_dir=str(tmp_path / "caps"), parquet_path="hdfs://nn/x",
+        checkpoint=str(tmp_path / "ckpt")), available_now=True)
+    q.awaitTermination()
+    assert chosen == ["hdfs://nn/x"]
+
+
+def test_failed_write_attempt_leaves_no_file(spark, tmp_path):
+    """A task attempt that fails after writing part of its rows removes
+    its tmp files, and the error it reports is the decoder's."""
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    from nf2pq_spark.sources.ipfix import FLOW_SCHEMA
+    from nf2pq_spark.streaming.sinks import task_parquet_batch_writer
+
+    write = task_parquet_batch_writer(str(tmp_path), StructType(
+        FLOW_SCHEMA.fields + [StructField("ts", TimestampType())]))
+    row = {"ts_ms": 90_000_000, "te_ms": 90_000_500, "sa": "10.0.0.1",
+           "da": "10.0.0.2", "sp": 1, "dp": 80, "pr": 6, "flg": 16,
+           "ipkt": 1, "ibyt": 100, "sas": 0, "das": 0, "exporter": "e"}
+
+    def frames(batches):
+        for _ in batches:
+            pass
+        yield pd.DataFrame([row])
+        raise ValueError("decoder failed mid-task")
+
+    raw = spark.createDataFrame([("p", b"x")], "path string, content binary")
+    with pytest.raises(Exception, match="decoder failed mid-task"):
+        write(raw, frames, 0)
+    left = [f for _d, _dirs, files in os.walk(tmp_path / "batch_id=0")
+            for f in files]
+    assert left == []

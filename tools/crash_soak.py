@@ -18,10 +18,12 @@ batch decode of the committed capture files:
   died inside a killed bridge's dot-prefixed ``.tmp`` (or while no
   bridge was listening) were never committed; UDP gives them no
   delivery promise, and no reader can observe them.
-* parquet = the collector's output table. Multiset equality with
-  golden proves the checkpoint lost nothing (no batch skipped) and
-  the batch_id=N overwrite duplicated nothing (no replayed batch
-  appended twice — the bug a blind append exhibits immediately).
+* parquet = the collector's output table. Multiset equality of whole
+  rows with golden (every flow column, plus ts/date/hour derived from
+  the golden ts_ms) proves the checkpoint lost nothing (no batch
+  skipped), the batch_id=N overwrite duplicated nothing (no replayed
+  batch appended twice — the bug a blind append exhibits immediately),
+  and the writer kept every value, type and partition.
 * rollup  = query_rollup() must equal the same aggregate computed
   directly over the parquet table, across kill cycles of the
   maintaining stream AND of compact_rollup's swap window.
@@ -214,6 +216,15 @@ def _send_flows(port: int, start: int, count: int, base_ms: int,
     sock.close()
 
 
+def _utc_ts_date_hour(ts_ms: int) -> tuple:
+    """(unix micros, date, hour) the collector must write for ``ts_ms``
+    under a UTC session time zone."""
+    import datetime
+
+    at = datetime.datetime.fromtimestamp(ts_ms / 1000, datetime.timezone.utc)
+    return ts_ms * 1000, at.date(), at.hour
+
+
 def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
          rate_per_s: float = 300.0, seed: int | None = None) -> dict:
     """Run the full soak; returns the verification summary dict.
@@ -291,20 +302,26 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
     from pyspark.sql import SparkSession
 
     from nf2pq_spark.operators.rollup import query_rollup
-    from nf2pq_spark.sources.ipfix import read_flow_files
+    from nf2pq_spark.sources.ipfix import FLOW_SCHEMA, read_flow_files
 
     # getOrCreate may hand back a caller's session (the pytest variant's
     # shared fixture) — stopping THAT would brick every later test
     pre_existing = SparkSession.getActiveSession() is not None
     spark = _soak_session("soak-verify")
     try:
-        golden = read_flow_files(spark, cap_glob).select("sa", "sp", "ts_ms")
-        gold = sorted(map(tuple, golden.collect()))
+        # whole rows: every flow column as decoded, plus ts/date/hour
+        # derived here from the golden ts_ms (session time zone UTC), so
+        # a wrong type or zone in the writer fails like a lost row
+        flow_cols = [f.name for f in FLOW_SCHEMA.fields]
+        gold = sorted(
+            tuple(r) + _utc_ts_date_hour(r.ts_ms)
+            for r in read_flow_files(spark, cap_glob).collect())
         table = spark.read.parquet(pq)
-        got = sorted(map(tuple, table.select("sa", "sp", "ts_ms").collect()))
+        got = sorted(map(tuple, table.select(
+            *flow_cols, F.unix_micros("ts"), "date", "hour").collect()))
         assert got == gold, (
             f"flows table diverged from golden decode: {len(got)} rows "
-            f"vs {len(gold)} committed (dupes or loss)")
+            f"vs {len(gold)} committed (dupes, loss or wrong values)")
 
         expect = sorted(map(tuple, (
             table.groupBy(F.date_trunc("hour", "ts").alias("bucket"),
