@@ -16,16 +16,19 @@ rotates files per interval per exporter, so files are the natural parallel
 unit and a 1000-executor scan spreads them evenly (matching binaryFile's
 behavior, minus its content-column copy through the JVM).
 
-Template handling inside a partition is self-contained: each file is scanned
-once for template sets (v9 id-0 / IPFIX id-2) and then decoded against that
-cache, so in-file ordering doesn't matter. Templates announced in a
-*different* file are not visible — the bridge writes template refreshes into
-every rotation file (RFC 7011 §8.1 periodic re-announcement); for captures
-that violate that, :func:`nf2pq_spark.sources.ipfix.read_flow_files` remains
-the cross-file two-phase path.
+Each file decodes through the same code as
+:func:`nf2pq_spark.sources.ipfix.read_flow_files`: the shared template and
+IE 160 boot harvest (``_extract_templates_pandas``), its latest-wins merge,
+then :func:`nf2pq_spark.sources.ipfix.make_decoder`, run per file instead of
+per batch. In-file ordering therefore doesn't matter, and a datagram whose
+template set fails to parse is dropped whole on both readers. Templates
+announced in a *different* file are not visible — the bridge writes
+template refreshes into every rotation file (RFC 7011 §8.1 periodic
+re-announcement); for captures that violate that, ``read_flow_files``
+remains the cross-file two-phase path.
 
-Rows are yielded as pyarrow RecordBatches (the API's fast path) — one batch
-per file, zero per-row Python loops beyond the decoders themselves.
+Rows are yielded as pyarrow RecordBatches (the API's fast path), in the
+Arrow form of ``FLOW_SCHEMA``.
 """
 
 from __future__ import annotations
@@ -82,87 +85,29 @@ def _list_capture_files(path: str) -> list[str]:
 def _decode_capture_file(fname: str):
     """Decode one capture file → pyarrow RecordBatches (executor-side).
 
+    The file becomes a one-row ``(path, content)`` frame and takes the
+    same two phases as :func:`nf2pq_spark.sources.ipfix.read_flow_files`,
+    harvested over this file alone: the template/boot harvest, its
+    latest-wins merge, then :func:`~nf2pq_spark.sources.ipfix.make_decoder`.
     Imports stay inside so only the partition's worker pays them.
     """
-    import struct
-
-    import pyarrow as pa
-
-    from .ipfix import (_decode_templated_vec, _decode_v5_array,
-                        _harvest_boot_rows, _iter_template_sets,
-                        _parse_options_templates, _v5_frame,
-                        _VecAccumulator, iter_datagrams)
-
-    exporter = fname.rsplit("/", 1)[0]
-    with open(fname, "rb") as fh:
-        buf = fh.read()
-
-    # pass 1: in-file template harvest (order-independence within file;
-    # flow AND v10 options templates), then a second walk decodes IE 160
-    # boot records against the COMPLETE options cache — a boot record
-    # preceding its template announcement in the file still resolves,
-    # mirroring read_flow_files' two-sweep phase-1
-    templates = {}
-    opt_cache, boots = {}, {}
-    saw_v10 = False
-    for dgram in iter_datagrams(buf):
-        try:
-            for tid, fields in _iter_template_sets(dgram):
-                if fields:
-                    templates[(exporter, tid)] = fields
-                else:
-                    templates.pop((exporter, tid), None)  # withdrawal
-            if len(dgram) >= 16 and struct.unpack_from(
-                    ">H", dgram, 0)[0] == 10:
-                saw_v10 = True
-                _parse_options_templates(dgram, exporter, opt_cache)
-        except (struct.error, IndexError, ValueError, KeyError):
-            continue
-    if saw_v10:
-        for dgram in iter_datagrams(buf):
-            try:
-                for odid, boot in _harvest_boot_rows(dgram, exporter,
-                                                     opt_cache):
-                    boots[(exporter, odid)] = boot  # latest wins
-            except (struct.error, IndexError, ValueError, KeyError):
-                continue
-
-    # pass 2: decode — same per-version dispatch as make_decoder
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    frames = []
-    acc = _VecAccumulator()
-    v5_arrs, v5_exps = [], []
-    for dgram in iter_datagrams(buf):
-        try:
-            version = struct.unpack_from(">H", dgram, 0)[0]
-            if version == 5:
-                v5_arrs.append(_decode_v5_array(dgram))
-                v5_exps.append(exporter)
-            elif version in (9, 10):
-                frames.extend(_decode_templated_vec(
-                    dgram, exporter, templates, acc, boots))
-        except (struct.error, IndexError, ValueError, KeyError):
-            continue  # drop the datagram, never the partition
+    from .ipfix import (_extract_templates_pandas, _merge_boot_rows,
+                        _merge_template_rows, make_decoder)
 
-    frames.extend(acc.frames())
-    if v5_arrs:
-        frames.append(_v5_frame(v5_arrs, v5_exps))
-    frames = [f for f in frames if len(f)]
-    if not frames:
-        return
-    pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    # arrow schema must match FLOW_SCHEMA's int widths exactly
-    schema = pa.schema([
-        ("ts_ms", pa.int64()), ("te_ms", pa.int64()),
-        ("sa", pa.string()), ("da", pa.string()),
-        ("sp", pa.int32()), ("dp", pa.int32()), ("pr", pa.int32()),
-        ("flg", pa.int32()), ("ipkt", pa.int64()), ("ibyt", pa.int64()),
-        ("sas", pa.int32()), ("das", pa.int32()),
-        ("exporter", pa.string()),
-    ])
-    table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
-    yield from table.to_batches()
+    with open(fname, "rb") as fh:
+        frame = pd.DataFrame({"path": [fname], "content": [fh.read()]})
+    rows = [r for harvested in _extract_templates_pandas(iter([frame]))
+            for r in harvested.itertuples(index=False)]
+    decode = make_decoder(_merge_template_rows(rows), _merge_boot_rows(rows))
+    schema = to_arrow_schema(FLOW_SCHEMA)
+    for flows in decode(iter([frame])):
+        if len(flows):
+            yield from pa.Table.from_pandas(
+                flows, schema=schema, preserve_index=False).to_batches()
 
 
 class CaptureDataSource(DataSource):
@@ -463,8 +408,6 @@ class CaptureStreamWriter(DataSourceStreamWriter):
 
 
 def register_capture_source(spark) -> None:
-    """Idempotently register ``format("nfcapture")`` on a session."""
-    try:
-        spark.dataSource.register(CaptureDataSource)
-    except Exception:
-        pass  # already registered
+    """Idempotently register ``format("nfcapture")`` on a session
+    (registering again replaces the source with the same class)."""
+    spark.dataSource.register(CaptureDataSource)

@@ -2021,6 +2021,11 @@ def make_decoder(initial_templates: dict | None = None,
     where real collectors resolve them too (options arrive on their own
     schedule, not necessarily before the flows they describe).
 
+    Callers: :func:`seeded_decoder` (``read_flow_files``, the streams and
+    the collector), the unseeded Kafka stream decode, and the
+    ``nfcapture`` DataSource (``sources/datasource.py``), which seeds it
+    from the same harvest run over one capture file.
+
     ``with_strings`` emits FLOW_STR_SCHEMA frames: v10 messages take the
     in-order scalar walk (record widths depend on per-record length
     prefixes — there is no record-parallel dtype for a varlen layout)

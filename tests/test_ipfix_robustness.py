@@ -514,11 +514,19 @@ def test_capture_read_paths_hostile_differential(spark, tmp_path):
     files (Spark's file sources never read those; the DataSource listing
     must match — it originally didn't, reading a foreign dot-prefixed
     half-written temp is the exact partial-read hazard the atomic-write
-    convention prevents)."""
+    convention prevents). Two IPFIX files pin the shared decode: a
+    template set whose valid record is followed by a truncated one (the
+    whole datagram drops on both readers, so its data-only messages
+    decode nothing), and IE 160 relative timestamps whose boot record
+    precedes its options template, next to a withdrawal."""
     import os
 
     from nf2pq_spark.sources.datasource import register_capture_source
-    from nf2pq_spark.sources.ipfix import (_CAPTURE_MAGIC, encode_netflow_v5,
+    from nf2pq_spark.sources.ipfix import (_CAPTURE_MAGIC,
+                                           _IPFIX_TEMPLATE_FIELDS,
+                                           _V9_TEMPLATE_FIELDS, encode_ipfix,
+                                           encode_ipfix_options,
+                                           encode_netflow_v5,
                                            encode_netflow_v9,
                                            read_flow_files,
                                            write_capture_file)
@@ -574,6 +582,43 @@ def test_capture_read_paths_hostile_differential(spark, tmp_path):
     with open(f"{d}/_committed_x", "w") as fh:
         fh.write("ok")
 
+    def data_only(msg):  # strip a message's leading template set
+        tset_len = struct.unpack_from(">H", msg, 18)[0]
+        return _ipfix_msg(msg[16 + tset_len:])
+
+    # template set: valid record for tid 256, then a truncated record
+    # (declares 5 field specs, carries 1); then data-only messages
+    trunc = struct.pack(">HHHH", 257, 5, 8, 4)
+    tset = _tset(256, _IPFIX_TEMPLATE_FIELDS)
+    tset = struct.pack(">HH", 2, len(tset) + len(trunc)) + tset[4:] + trunc
+    m0, m1 = encode_ipfix(flows(900, 4), per_packet=2, template_every=100)
+    write_capture_file(f"{d}/cap_tset_trunc.bin",
+                       [_ipfix_msg(tset), data_only(m0), m1])
+    # IE 160 boot record BEFORE its options template, relative-timestamp
+    # (IE 21/22) flows, and tid 320 announced, withdrawn, then sent data
+    boot, odid = 1_700_000_000_000, 7
+    export_s = (boot + 600_000) // 1000
+    opt = encode_ipfix_options(
+        [{149: odid, 34: 1, 35: 0, 84: "s0", 160: boot}],
+        extra_option_fields=[(160, 8)], export_time=export_s, odid=odid)
+    opt_tset = opt[16:16 + struct.unpack_from(">H", opt, 18)[0]]
+
+    def domain_msg(body):  # the boot epoch keys on the header's odid
+        return struct.pack(">HHIII", 10, 16 + len(body), export_s, 0,
+                           odid) + body
+
+    rels = [2**32 - 5_000, 30_000, 600_400]
+    rel_msgs = encode_ipfix([_rel_flow(i, r) for i, r in enumerate(rels)],
+                            template_fields=_V9_TEMPLATE_FIELDS,
+                            template_id=310, export_time=export_s,
+                            odid=odid)
+    w0, w1 = encode_ipfix(flows(800, 2), per_packet=1, template_every=100,
+                          template_id=320)
+    write_capture_file(f"{d}/cap_ie160.bin",
+                       [domain_msg(opt[16 + len(opt_tset):])] + rel_msgs
+                       + [domain_msg(opt_tset), w0,
+                          _ipfix_msg(_tset(320, [])), w1])
+
     register_capture_source(spark)
     cols = [c for c in
             spark.read.format("nfcapture").load(d).columns
@@ -592,7 +637,13 @@ def test_capture_read_paths_hostile_differential(spark, tmp_path):
     # bases 10,50,100,200,300,400,500 present; 600 (hidden), 700
     # (sidecar) absent on BOTH paths
     assert "0.0.2.88" not in sas and "0.0.2.188" not in sas
-    assert len(via_ds) == 3 + 4 + 3 + 3 + 3 + 3 + 3
+    # + 0 (truncated template set) + 3 (IE 160) + 1 (before withdrawal)
+    assert len(via_ds) == 3 + 4 + 3 + 3 + 3 + 3 + 3 + 0 + 3 + 1
+    ts_of = {r[cols.index("sa")]: r[cols.index("ts_ms")] for r in via_ds}
+    golden = [boot - 5_000, boot + 30_000, boot + 600_400]
+    assert [ts_of[f"10.0.0.{i}"] for i in range(3)] == golden
+    assert "0.0.3.132" not in sas  # base 900: the truncated template set
+    assert "0.0.3.32" in sas and "0.0.3.33" not in sas  # 320: 800, 801
 
 
 # -- NetFlow v9 sysUptime wraparound (RFC 3954; nfdump's correction) -------

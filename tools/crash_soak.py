@@ -366,6 +366,7 @@ def main() -> int:
         _child_compact(args[1])
         return 0
 
+    import shutil
     import tempfile
 
     cycles = int(args[args.index("--cycles") + 1]) if "--cycles" in args else 3
@@ -373,7 +374,13 @@ def main() -> int:
                  if "--datagrams" in args else 1500)
     workdir = tempfile.mkdtemp(prefix="nf2pq_soak_")
     t0 = time.time()
-    summary = soak(workdir, cycles=cycles, datagrams=datagrams)
+    try:
+        summary = soak(workdir, cycles=cycles, datagrams=datagrams)
+    except BaseException:
+        # a failed soak keeps its captures, table and checkpoints
+        print(f"SOAK FAILED: evidence kept in {workdir}", file=sys.stderr)
+        raise
+    shutil.rmtree(workdir)
     print(f"SOAK OK in {time.time() - t0:.0f}s: {summary}")
     return 0
 
