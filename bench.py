@@ -3,13 +3,16 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+     "queries_cpu": [...], ...}
 
 The line is printed LAST and kept under 1900 bytes (the driver records
-only the final 2000 bytes of stdout — r11's inline per-query CPU series
-overflowed that tail and the round's bench came back unparsed); the full
-telemetry (per-query CPU seconds, idle-gate, loadavg, settle/spot rows)
-goes to the BENCH_DETAIL.json sidecar next to this file.
+only the final 2000 bytes of stdout — r11's inline per-query CPU map
+overflowed that tail and the round's bench came back unparsed), so the
+per-query CPU seconds ride on it as ``queries_cpu``, a positional array
+in the key order of ``queries``; the full telemetry (per-query CPU
+seconds by name, idle-gate, loadavg, settle/spot rows) goes to the
+BENCH_DETAIL.json sidecar next to this file.
 
 Each query executes fully (noop sink — no driver collect) after a shared
 session warm-up, so the numbers measure plan execution, not JVM startup.
@@ -355,6 +358,9 @@ def main() -> None:
         # per-query series lives in the detail sidecar since r12 — it
         # alone pushed the r11 line past the driver's stdout tail)
         "process_cpu_seconds_total": round(sum(cpu_secs.values()), 3),
+        # per-query CPU seconds, positional in the key order of
+        # ``queries``: a keyed map would push the line past the budget
+        "queries_cpu": [cpu_secs[name] for name in timings],
         "idle_released": idle_gate["released_idle"],
     }
     # skew resilience: the 80/20 hot-key as-of (bucketed operator) vs the
@@ -416,7 +422,7 @@ _LINE_BUDGET = 1900
 #: value, unit, queries, sf — are never shed)
 _SHEDDABLE = ("idle_released", "skew_ratio_in_envelope",
               "skew_overhead_in_envelope", "skew_overhead_sec",
-              "skew_ratio_asof", "process_cpu_seconds_total",
+              "skew_ratio_asof", "queries_cpu", "process_cpu_seconds_total",
               "n_registered")
 
 

@@ -2163,12 +2163,38 @@ def read_flow_files(spark, path: str, with_strings: bool = False) -> DataFrame:
     return decode_datagram_frame(raw, with_strings=with_strings)
 
 
+def _drop_unlogged_offset_writes(spark, checkpoint: str) -> None:
+    """Remove what a killed first offset-log write left in
+    ``<checkpoint>/offsets``.
+
+    Spark writes each offset-log entry to a dot-prefixed tmp file and
+    then renames it. A process killed between the two leaves the tmp
+    (and its ``.crc``) behind, and a query whose offset log holds no
+    batch refuses to start over a non-empty ``offsets`` directory
+    (``STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY``): a collector killed
+    during its first trigger could never restart. While no batch is
+    logged, every entry there is such a partial write. Once one is,
+    Spark resumes from the log and skips tmp files itself, so nothing
+    is touched."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    offsets = Path(checkpoint, "offsets")
+    fs = offsets.getFileSystem(spark._jsc.hadoopConfiguration())
+    # entry 0 is the one-stat proof that a batch is logged; Spark purges
+    # old entries, so a long-lived log falls back to a listing
+    if (fs.exists(Path(offsets, "0")) or not fs.exists(offsets)
+            or len(fs.globStatus(Path(offsets, "[0-9]*")))):
+        return
+    for status in fs.listStatus(offsets):
+        fs.delete(status.getPath(), False)
+
+
 def stream_capture_files(spark, path: str, process, checkpoint: str,
                          available_now: bool = True):
     """Capture files as a stream of raw micro-batches:
     ``process(raw_df, batch_id)`` receives each batch's ``(path,
     content)`` frame inside ``foreachBatch``, and the checkpoint commits
-    after it returns."""
+    after it returns. A checkpoint whose first offset-log write was cut
+    short by a crash is cleared of that write first."""
 
     def raw_batch(batch_df: DataFrame, batch_id: int) -> None:
         process(batch_df.select("path", "content"), batch_id)
@@ -2181,6 +2207,7 @@ def stream_capture_files(spark, path: str, process, checkpoint: str,
               .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)
+    _drop_unlogged_offset_writes(spark, checkpoint)
     return writer.start()
 
 

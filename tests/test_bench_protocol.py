@@ -216,19 +216,23 @@ def test_cpu_delta_nonnegative_with_dying_child():
 def test_emit_line_under_budget_with_full_registry(tmp_path):
     """r11 verdict item 1: the final stdout line must stay under the
     driver's 2000-byte tail with the FULL current registry worth of
-    per-query timings (31+ bench queries today; headroom asserted with
-    40), all optional fields populated, and the sidecar carrying the
-    detail that overflowed r11's line."""
-    queries = {f"l{i:02d}_a_realistically_long_query_name": 1.234
-               for i in range(40)}
+    per-query timings and CPU seconds, all optional fields populated,
+    and the sidecar carrying the detail that overflowed r11's line.
+    Headroom is asserted with 40 long query names: the wall map survives
+    whole, and the positional CPU array is shed whole, never cut."""
+    names = [s.name for s in bench.plans.REGISTRY.values() if s.bench]
+    queries = {n: 12.345 for n in names}
+    # distinct values, so a reordered array fails
+    cpu = {n: 100.0 + i + 0.125 for i, n in enumerate(names)}
     out = {
         "metric": "headline_queries_total", "value": 24.43, "unit": "sec",
         "queries": queries, "sf": 0.1, "n_registered": 256,
-        "process_cpu_seconds_total": 312.456, "idle_released": True,
+        "process_cpu_seconds_total": 312.456,
+        "queries_cpu": [cpu[n] for n in queries], "idle_released": True,
         "skew_ratio_asof": 1.53, "skew_overhead_sec": 0.21,
         "skew_ratio_in_envelope": True, "skew_overhead_in_envelope": True,
     }
-    detail = {"queries_cpu_sec": {k: 9.876 for k in queries},
+    detail = {"queries_cpu_sec": cpu,
               "idle_gate": {"threshold": 2.0, "waited_sec": 0.0,
                             "load1_at_release": 0.8, "released_idle": True},
               "loadavg_start": [1, 1, 1], "loadavg_end": [1, 1, 1]}
@@ -236,11 +240,23 @@ def test_emit_line_under_budget_with_full_registry(tmp_path):
     line = bench._emit(out, detail, detail_path=str(sidecar))
     assert len(line.encode()) < 1900
     parsed = json.loads(line)
-    assert parsed["value"] == 24.43
-    assert parsed["queries"] == queries  # nothing shed at today's size
+    assert parsed == out  # nothing shed at today's size
+    assert len(parsed["queries_cpu"]) == len(parsed["queries"]) == len(names)
+    assert parsed["queries_cpu"] == [cpu[n] for n in parsed["queries"]]
     side = json.loads(sidecar.read_text())
-    assert side["queries_cpu_sec"] == detail["queries_cpu_sec"]
+    assert side["queries_cpu_sec"] == cpu
     assert side["idle_gate"]["released_idle"] is True
+
+    long_names = {f"l{i:02d}_a_realistically_long_query_name": 1.234
+                  for i in range(40)}
+    line = bench._emit(dict(out, queries=long_names,
+                            queries_cpu=[9.876] * 40),
+                       detail, detail_path=str(sidecar))
+    assert len(line.encode()) < 1900
+    parsed = json.loads(line)
+    assert parsed["queries"] == long_names
+    assert "queries_cpu" not in parsed
+    assert parsed["process_cpu_seconds_total"] == 312.456
 
 
 def test_emit_sheds_to_stay_parseable(tmp_path):

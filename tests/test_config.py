@@ -728,3 +728,73 @@ def test_failed_write_attempt_leaves_no_file(spark, tmp_path):
     left = [f for _d, _dirs, files in os.walk(tmp_path / "batch_id=0")
             for f in files]
     assert left == []
+
+
+def _jobs_newest_first(spark):
+    """(id, name) of every job in the status store, newest first.
+    Streaming jobs carry a job group, so
+    ``statusTracker().getJobIdsForGroup(None)`` would miss them."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)  # the store is fed async
+    jobs = sc.statusStore().jobsList(None)
+    for i in range(jobs.size()):
+        yield jobs.apply(i).jobId(), jobs.apply(i).name()
+
+
+@pytest.mark.parametrize("layout", ["40_files_one_exporter",
+                                    "one_file_40_exporters"])
+def test_drain_lists_its_files_on_the_driver(spark, tmp_path, layout):
+    """A local session lists a batch's capture files on the driver: a
+    drain of 40 files (more than Spark's 32-path listing threshold) runs
+    the harvest job and the write job and nothing else, whether the files
+    share one exporter directory or sit one per exporter directory."""
+    import itertools
+
+    from nf2pq_spark.sources.ipfix import encode_netflow_v5, write_capture_file
+
+    cap = tmp_path / "caps"
+    for i in range(40):
+        d = cap / ("10.0.0.1" if layout == "40_files_one_exporter"
+                   else f"10.0.0.{i + 1}")
+        os.makedirs(d, exist_ok=True)
+        flows = [{"sa_int": (10 << 24) + i, "da_int": 2, "sp": 2 * i + k,
+                  "dp": 80, "pr": 6, "flg": 16, "ipkt": 1, "ibyt": 100,
+                  "ts_ms": 90_000_000 + i, "te_ms": 90_000_500 + i,
+                  "sas": 0, "das": 0} for k in range(2)]
+        write_capture_file(str(d / f"cap_{i:02d}.bin"),
+                           encode_netflow_v5(flows))
+
+    last, _name = next(_jobs_newest_first(spark), (-1, None))
+    out = _drain(spark, tmp_path, cap)
+    drain_jobs = list(itertools.takewhile(lambda job: job[0] > last,
+                                          _jobs_newest_first(spark)))
+
+    assert len(drain_jobs) == 2, drain_jobs
+    sps = [r.sp for r in spark.read.parquet(out).select("sp").collect()]
+    assert sorted(sps) == list(range(80))
+
+
+def test_drain_restarts_after_a_killed_first_offset_write(spark, tmp_path):
+    """A collector killed while Spark wrote its first offset-log entry
+    leaves the entry's dot-prefixed tmp file (and its ``.crc``) in
+    ``<checkpoint>/offsets``, the state a kill -9 in the crash soak left.
+    The next drain starts anyway and decodes every flow; once a batch is
+    logged, a stray tmp of a later entry is left to Spark."""
+    cap = tmp_path / "caps"
+    _v5_capture(cap)
+    offsets = tmp_path / "ckpt" / "offsets"
+    os.makedirs(offsets)
+    tmp = ".0.1fa6dc3b-9af8-4cea-b90e-3b4a425c3110.tmp"
+    (offsets / tmp).write_text('v1\n{"batchWatermarkMs":0,')
+    (offsets / f".{tmp}.crc").write_bytes(b"crc\x00")
+
+    out = _drain(spark, tmp_path, cap)
+    sps = [r.sp for r in spark.read.parquet(out).select("sp").collect()]
+    assert sorted(sps) == [0, 1, 2, 3]
+    assert not (offsets / tmp).exists()
+
+    later = ".1.6a0f5e1c-0d7e-4b5b-9a43-2f1d3c4b5a69.tmp"
+    (offsets / later).write_text("v1\n")
+    _drain(spark, tmp_path, cap)
+    assert (offsets / later).exists()
+    assert "0" in os.listdir(offsets)

@@ -16,6 +16,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(_REPO, "tools"))
 
@@ -43,3 +45,18 @@ def test_crash_soak_small(spark, tmp_path):
     assert summary["drains_killed"] >= 1
     assert summary["rollups_killed"] >= 1
     assert summary["compacts_killed"] >= 1
+
+
+def test_failed_child_reports_its_stderr(tmp_path):
+    """A child that fails leaves its cause behind: the error carries the
+    last lines of the child's stderr, which stays in the work directory.
+    ``--bridge`` without its arguments fails at once, before any Spark."""
+    from crash_soak import _run_to_completion
+
+    with pytest.raises(RuntimeError, match="IndexError") as err:
+        _run_to_completion(["--bridge"], str(tmp_path))
+    assert "exited 1" in str(err.value)
+    logs = [f for f in os.listdir(tmp_path)
+            if f.startswith("bridge_") and f.endswith(".stderr")]
+    assert len(logs) == 1
+    assert "IndexError" in (tmp_path / logs[0]).read_text()

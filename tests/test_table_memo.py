@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from nf2pq_spark.session import RUNTIME_CONF, ensure_session_conf
+from nf2pq_spark.session import LOCAL_CONF, RUNTIME_CONF, ensure_session_conf
 from nf2pq_spark.sources import tables
 from nf2pq_spark.sources.tables import load_table
 
@@ -93,6 +93,12 @@ def test_ensure_session_conf_memoized_and_idempotent(spark):
     assert spark.conf.get(
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == \
         RUNTIME_CONF["spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"]
+    # the test session's master is local[...]: file listing stays on the
+    # driver
+    assert spark.sparkContext.master.startswith("local[")
+    assert spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold") == \
+        LOCAL_CONF["spark.sql.sources.parallelPartitionDiscovery.threshold"]
     # second call is a no-op (the memo short-circuits after one conf read)
     assert ensure_session_conf(spark) is spark
 

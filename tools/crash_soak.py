@@ -39,8 +39,10 @@ Orchestrating run (defaults sized for ~2-3 min on local[4]):
 
     python tools/crash_soak.py [--cycles N] [--datagrams N]
 
-Exit 0 iff every verification holds. The bounded CI variant lives in
-tests/test_crash_soak.py.
+Exit 0 iff every verification holds. Each child's stderr is written to
+a ``<mode>_*.stderr`` file in the work directory, which a failed soak
+keeps; a child that must finish and fails raises with the last lines of
+its file. The bounded CI variant lives in tests/test_crash_soak.py.
 """
 
 from __future__ import annotations
@@ -51,6 +53,7 @@ import signal
 import socket
 import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -128,15 +131,27 @@ def _child_compact(rollup_dir: str) -> None:
 # orchestration
 # --------------------------------------------------------------------------
 
-def _spawn(args: list[str]) -> subprocess.Popen:
+def _spawn(args: list[str], workdir: str) -> subprocess.Popen:
     """Child in its OWN process group: pyspark's JVM is a child of the
     python process, and a bare SIGKILL to python would orphan a JVM that
     keeps running the job — the 'killed' drain would finish its writes
-    and the crash injection would test nothing."""
-    return subprocess.Popen(
-        [sys.executable, os.path.abspath(__file__), *args],
-        start_new_session=True,
-        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    and the crash injection would test nothing. The child's stderr goes
+    to its own ``<mode>_*.stderr`` file in ``workdir`` (the returned
+    process's ``stderr_path``), kept with the rest of the evidence when
+    the soak fails."""
+    fd, path = tempfile.mkstemp(suffix=".stderr", dir=workdir,
+                                prefix=args[0].lstrip("-") + "_")
+    with os.fdopen(fd, "wb") as err:
+        p = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), *args],
+            start_new_session=True, stdout=subprocess.DEVNULL, stderr=err)
+    p.stderr_path = path
+    return p
+
+
+def _stderr_tail(p: subprocess.Popen, lines: int = 20) -> str:
+    with open(p.stderr_path, errors="replace") as err:
+        return "".join(err.readlines()[-lines:])
 
 
 def _kill9(p: subprocess.Popen) -> None:
@@ -147,10 +162,11 @@ def _kill9(p: subprocess.Popen) -> None:
     p.wait()
 
 
-def _run_with_random_kill(args: list[str], kill_after: float) -> bool:
+def _run_with_random_kill(args: list[str], workdir: str,
+                          kill_after: float) -> bool:
     """Spawn a child, kill -9 its whole group after ``kill_after`` s.
     True if the child finished BEFORE the kill fired."""
-    p = _spawn(args)
+    p = _spawn(args, workdir)
     try:
         p.wait(timeout=kill_after)
         return True
@@ -159,8 +175,9 @@ def _run_with_random_kill(args: list[str], kill_after: float) -> bool:
         return False
 
 
-def _run_to_completion(args: list[str], timeout: float = 300.0) -> None:
-    p = _spawn(args)
+def _run_to_completion(args: list[str], workdir: str,
+                       timeout: float = 300.0) -> None:
+    p = _spawn(args, workdir)
     try:
         rc = p.wait(timeout=timeout)
     except subprocess.TimeoutExpired:
@@ -170,7 +187,8 @@ def _run_to_completion(args: list[str], timeout: float = 300.0) -> None:
         _kill9(p)
         raise
     if rc != 0:
-        raise RuntimeError(f"clean run {args} exited {rc}")
+        raise RuntimeError(f"clean run {args} exited {rc}; last lines of "
+                           f"{p.stderr_path}:\n{_stderr_tail(p)}")
 
 
 def _wait_ready(p: subprocess.Popen, ready_file: str,
@@ -181,7 +199,9 @@ def _wait_ready(p: subprocess.Popen, ready_file: str,
     deadline = time.monotonic() + timeout
     while not os.path.exists(ready_file):
         if p.poll() is not None:
-            raise RuntimeError(f"child exited {p.returncode} before ready")
+            raise RuntimeError(f"child exited {p.returncode} before ready; "
+                               f"last lines of {p.stderr_path}:\n"
+                               f"{_stderr_tail(p)}")
         if time.monotonic() > deadline:
             _kill9(p)
             raise TimeoutError(f"child not ready after {timeout:.0f}s")
@@ -244,7 +264,8 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
     sent = 0
     for c in range(cycles):
         ready = os.path.join(workdir, f"bridge_{c}.ready")
-        bridge = _spawn(["--bridge", cap, str(port), "0.25", ready])
+        bridge = _spawn(["--bridge", cap, str(port), "0.25", ready],
+                        workdir)
         _wait_ready(bridge, ready)
         _send_flows(port, sent, per_cycle, base_ms, rate_per_s)
         sent += per_cycle
@@ -270,11 +291,12 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
     drains_killed = 0
     for i in range(cycles):
         kill_after = 3.0 if i == 0 else rng.uniform(8.0, 18.0)
-        if _run_with_random_kill(["--drain", cap_glob, pq, ckpt],
+        if _run_with_random_kill(["--drain", cap_glob, pq, ckpt], workdir,
                                  kill_after=kill_after):
             break  # finished before the kill — backlog already drained
         drains_killed += 1
-    _run_to_completion(["--drain", cap_glob, pq, ckpt])  # final clean drain
+    # final clean drain
+    _run_to_completion(["--drain", cap_glob, pq, ckpt], workdir)
 
     # -- phase C: rollup maintenance churn + compaction churn --------------
     # kill windows sized to the short jobs (JVM spin-up ~6s): a window
@@ -283,19 +305,19 @@ def soak(workdir: str, cycles: int = 3, datagrams: int = 1500,
     rollups_killed = 0
     for i in range(max(1, cycles - 1)):
         kill_after = 3.0 if i == 0 else rng.uniform(5.0, 10.0)
-        if _run_with_random_kill(["--rollup", pq, rollup, rckpt],
+        if _run_with_random_kill(["--rollup", pq, rollup, rckpt], workdir,
                                  kill_after=kill_after):
             break
         rollups_killed += 1
-    _run_to_completion(["--rollup", pq, rollup, rckpt])
+    _run_to_completion(["--rollup", pq, rollup, rckpt], workdir)
     compacts_killed = 0
     for i in range(max(1, cycles - 1)):
         kill_after = 3.0 if i == 0 else rng.uniform(5.0, 9.0)
-        if _run_with_random_kill(["--compact", rollup],
+        if _run_with_random_kill(["--compact", rollup], workdir,
                                  kill_after=kill_after):
             break
         compacts_killed += 1
-    _run_to_completion(["--compact", rollup])
+    _run_to_completion(["--compact", rollup], workdir)
 
     # -- verification -------------------------------------------------------
     import pyspark.sql.functions as F
@@ -367,7 +389,6 @@ def main() -> int:
         return 0
 
     import shutil
-    import tempfile
 
     cycles = int(args[args.index("--cycles") + 1]) if "--cycles" in args else 3
     datagrams = (int(args[args.index("--datagrams") + 1])
