@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import hadoop_path
+
 
 def _assert_disjoint_paths(src: str, dst: str, what: str) -> None:
     """Refuse a destructive write whose target aliases its own input.
@@ -41,8 +43,7 @@ def _assert_disjoint_paths(src: str, dst: str, what: str) -> None:
 def dataset_bytes(spark: SparkSession, path: str) -> int:
     """Total bytes under ``path`` via the Hadoop FileSystem API — works on
     local/HDFS/S3A alike, no data scan."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = hadoop_path(spark)(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs.getContentSummary(p).getLength()
 

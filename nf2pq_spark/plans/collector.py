@@ -16,6 +16,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_dir
 from ..sources.ipfix import (_VARLEN, encode_ipfix, encode_netflow_v5,
                              encode_netflow_v9, read_flow_files,
                              write_capture_file)
@@ -707,12 +708,9 @@ def s4b_json_scan(spark, sf_dir):
     tags=("S4", "S9"),
 )
 def s9_orc_roundtrip(spark, sf_dir):
-    import os
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", "value")
-    out = os.path.join(tempfile.mkdtemp(prefix="s9_orc_"), "events_orc")
+    out = os.path.join(scratch_dir("s9_orc_"), "events_orc")
     ev.write.mode("overwrite").option("compression", "zstd").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("event_type").agg(
@@ -746,11 +744,8 @@ def s9_orc_roundtrip(spark, sf_dir):
     tags=("S2", "S10"),
 )
 def s10_schema_evolution(spark, sf_dir):
-    import os
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="s10_evo_")
+    base = scratch_dir("s10_evo_")
     old_batch = ev.filter(F.col("event_id") % 2 == 1).select(
         "event_id", "event_type")                      # pre-evolution schema
     new_batch = ev.filter(F.col("event_id") % 2 == 0).select(
@@ -1260,15 +1255,13 @@ def _st13_rollup(back):
         .withColumn("da", F.col("da_int").cast("string"))),
 )
 def st13_capture_stream_sink(spark, sf_dir):
-    import tempfile
-
     from ..sources.datasource import register_capture_source
     from ..streaming.jobs import read_events_stream
 
     register_capture_source(spark)
     stream = _flow_columns(read_events_stream(spark, sf_dir))
-    out = tempfile.mkdtemp(prefix="st13_caps_") + "/caps"
-    ckpt = tempfile.mkdtemp(prefix="st13_ckpt_")
+    out = scratch_dir("st13_caps_") + "/caps"
+    ckpt = scratch_dir("st13_ckpt_")
     q = (stream.writeStream.format("nfcapture")
          .option("path", out)
          .option("checkpointLocation", ckpt)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_dir
 from ..sources.tables import load_table
 from ..streaming.jobs import (read_events_stream, run_available_now,
                               stream_stream_interval_join, streaming_dedup,
@@ -448,10 +449,9 @@ def st7_stateful_totals(spark, sf_dir):
 )
 def s2_partitioned_sink(spark, sf_dir):
     import os
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
-    out = os.path.join(tempfile.mkdtemp(prefix="s2_sink_"), "events_by_date")
+    out = os.path.join(scratch_dir("s2_sink_"), "events_by_date")
     (ev.withColumn("date", F.to_date("ts"))
        .write.mode("overwrite").partitionBy("date").parquet(out))
     back = spark.read.parquet(out)
@@ -504,12 +504,11 @@ def _st8_probe(spark, sf_dir):
 )
 def st8_streaming_sink_roundtrip(spark, sf_dir):
     import os
-    import tempfile
 
     from ..streaming.sinks import parquet_rotating_sink
 
     stream = read_events_stream(spark, sf_dir).select("ts", "value")
-    base = tempfile.mkdtemp(prefix="st8_sink_")
+    base = scratch_dir("st8_sink_")
     out = os.path.join(base, "flows")
     ckpt = os.path.join(base, "ckpt")
     q = parquet_rotating_sink(stream, out, ckpt, ts_col="ts",
@@ -547,8 +546,6 @@ def _st12_rollup(back):
         _batch_events(spark, sf_dir).select("user_id", "value")),
 )
 def st12_foreach_batch_sink(spark, sf_dir):
-    import tempfile
-
     from ..session import ensure_session_conf
     from ..streaming.sinks import (foreach_batch_sink,
                                    idempotent_parquet_batch_writer)
@@ -560,8 +557,8 @@ def st12_foreach_batch_sink(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     ).select("user_id", "value")
-    base = tempfile.mkdtemp(prefix="st12_") + "/delivered"
-    ckpt = tempfile.mkdtemp(prefix="st12_ckpt_")
+    base = scratch_dir("st12_") + "/delivered"
+    ckpt = scratch_dir("st12_ckpt_")
     q = foreach_batch_sink(stream, idempotent_parquet_batch_writer(base), ckpt)
     q.awaitTermination()
     # batch_id partition dirs discovered by the read-back

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, IntegerType, LongType, MapType,
                                StringType, StructField, StructType)
 
+from ..session import hadoop_path
+
 #: normalized flow schema (nfdump field model, SURVEY §1.1)
 FLOW_SCHEMA = StructType([
     StructField("ts_ms", LongType()),       # flow start, ms since epoch
@@ -2176,7 +2178,7 @@ def _drop_unlogged_offset_writes(spark, checkpoint: str) -> None:
     logged, every entry there is such a partial write. Once one is,
     Spark resumes from the log and skips tmp files itself, so nothing
     is touched."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = hadoop_path(spark)
     offsets = Path(checkpoint, "offsets")
     fs = offsets.getFileSystem(spark._jsc.hadoopConfiguration())
     # entry 0 is the one-stat proof that a batch is logged; Spark purges

@@ -16,34 +16,14 @@ SQL oracle.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import scratch_dir
 from ..session import ensure_session_conf
-
-_SCRATCH_ROOT: str | None = None
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Per-process scratch dir, removed atexit.
-
-    Every streaming query needs a symlink dir + checkpoint dir; plain
-    mkdtemp leaked both on every call (hundreds of /tmp dirs per grading
-    sweep, nothing ever removing them). One nf2pq_-prefixed root per
-    process keeps them together, cleans up on exit, and lets the cold
-    verify drive's /tmp/nf2pq_* sweep reclaim anything a crashed process
-    left behind."""
-    global _SCRATCH_ROOT
-    if _SCRATCH_ROOT is None:
-        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="nf2pq_stream_scratch_")
-        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str,
@@ -68,7 +48,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     if os.path.isdir(path):
         stream_dir = path
     else:
-        stream_dir = _scratch_dir("events_stream_")
+        stream_dir = scratch_dir("events_stream_")
         os.symlink(path, os.path.join(stream_dir, "events.parquet"))
     schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
@@ -89,7 +69,7 @@ def run_available_now(result: DataFrame, output_mode: str = "complete",
     Returns (spark, table_name); read results with ``spark.table(name)``.
     """
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = _scratch_dir(f"ckpt_{name}_")
+    ckpt = scratch_dir(f"ckpt_{name}_")
     q = (
         result.writeStream.format("memory")
         .queryName(name)

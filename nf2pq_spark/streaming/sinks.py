@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from ..session import hadoop_path
+
 
 def with_partition_columns(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Add date/hour partition columns for the rotated-file layout."""
@@ -195,10 +197,10 @@ def _fs_salt_via_hadoop(checkpoint: str) -> str | None:
         spark = SparkSession.getActiveSession()
         if spark is None:
             return None
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(checkpoint)
+        Path = hadoop_path(spark)
+        jpath = Path(checkpoint)
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        salt_path = jvm.org.apache.hadoop.fs.Path(jpath, "nf2pq_dedup_salt")
+        salt_path = Path(jpath, "nf2pq_dedup_salt")
         if not fs.exists(salt_path):
             import uuid
 
@@ -210,8 +212,7 @@ def _fs_salt_via_hadoop(checkpoint: str) -> str | None:
                 # and a concurrent reader resolved '' to the URI-hash
                 # space while later restarts used the real salt:
                 # divergent token spaces, double inserts (r12 review)
-                tmp = jvm.org.apache.hadoop.fs.Path(
-                    jpath, f"nf2pq_dedup_salt.{fresh}.tmp")
+                tmp = Path(jpath, f"nf2pq_dedup_salt.{fresh}.tmp")
                 out = fs.create(tmp, True)
                 try:
                     out.write(bytearray(fresh.encode("ascii")))

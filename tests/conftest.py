@@ -20,6 +20,18 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def new_dir(tmp_path):
+    """``new_dir(name)`` makes a fresh directory under the test's own
+    ``tmp_path`` (pytest keeps only the last few runs' base dirs) and
+    returns its path as a string."""
+    def make(name: str) -> str:
+        path = tmp_path / name
+        path.mkdir()
+        return str(path)
+    return make
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -798,3 +798,53 @@ def test_drain_restarts_after_a_killed_first_offset_write(spark, tmp_path):
     _drain(spark, tmp_path, cap)
     assert (offsets / later).exists()
     assert "0" in os.listdir(offsets)
+
+
+_CODEGEN_PROBE = r"""
+import json
+from pyspark.sql import functions as F
+from nf2pq_spark.session import get_spark
+
+spark = get_spark("codegen-cache", cpus=2)
+compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME())
+
+def plan(i):
+    # the literal is inlined into the generated code: every i is a new
+    # pair of classes (partial and final aggregate)
+    return (spark.range(64).select((F.col("id") * i).alias("v"))
+            .groupBy((F.col("v") % 7).alias("k")).agg(F.sum("v")))
+
+plan(0).collect()
+before_fill = compiles.getCount()
+for i in range(1, 61):
+    plan(i).collect()
+before_rerun = compiles.getCount()
+plan(0).collect()
+print(json.dumps({
+    "max_entries": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
+    "fill": before_rerun - before_fill,
+    "rerun": compiles.getCount() - before_rerun}))
+"""
+
+
+def test_codegen_cache_keeps_query_classes_across_queries(tmp_path):
+    """A session from ``get_spark`` keeps a query's generated classes
+    while more than Spark's default 100 other classes are compiled after
+    it, so running the query again compiles nothing. The cache is
+    JVM-wide and sized when the first session is built, so this runs in
+    a fresh process."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", _CODEGEN_PROBE], env=env,
+                         cwd=tmp_path, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["max_entries"] == "4096"
+    assert got["fill"] > 100  # enough to evict the first plan at 100
+    assert got["rerun"] == 0

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -115,10 +114,10 @@ def test_two_phase_agg_matches_plain(spark, sf_dir):
     assert plain == two
 
 
-def test_batch_partitioned_sink_prunes(spark, sf_dir):
+def test_batch_partitioned_sink_prunes(spark, sf_dir, new_dir):
     """S2: partitionBy batch sink produces a layout the scanner prunes."""
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
-    out = tempfile.mkdtemp(prefix="batch_sink_") + "/ev"
+    out = new_dir("batch_sink") + "/ev"
     ev.write.mode("overwrite").partitionBy("date").parquet(out)
     assert any(d.startswith("date=") for d in os.listdir(out))
     back = spark.read.parquet(out).filter(F.col("date") == "2024-01-05")
@@ -128,14 +127,14 @@ def test_batch_partitioned_sink_prunes(spark, sf_dir):
     assert back.count() == n_expected
 
 
-def test_compact_parquet_reduces_files(spark, sf_dir):
+def test_compact_parquet_reduces_files(spark, sf_dir, new_dir):
     """Compaction rewrites a many-small-file dataset into few files with
     identical contents; partitioned mode keeps the hive layout at one
     file per partition."""
     from nf2pq_spark.operators.compact import compact_parquet, dataset_bytes
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    base = tempfile.mkdtemp(prefix="compact_")
+    base = new_dir("compact")
     src = base + "/src"
     ev.repartition(64).write.parquet(src)  # simulate micro-batch debris
     assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) >= 32

@@ -668,13 +668,12 @@ def test_observe_metrics_single_pass(spark, sf_dir, duck):
     assert m["min_value"] == vmin and m["max_value"] == vmax
 
 
-def test_capture_datasource_streaming(spark, tmp_path):
+def test_capture_datasource_streaming(spark, tmp_path, new_dir):
     """The nfcapture source also works under readStream: availableNow
     drains existing files; a restart from the same checkpoint consumes
     ONLY files that arrived while the query was down (offset = file-list
     prefix length)."""
     import os
-    import tempfile
 
     from nf2pq_spark.sources.datasource import register_capture_source
     from nf2pq_spark.sources.ipfix import encode_netflow_v5, write_capture_file
@@ -692,7 +691,7 @@ def test_capture_datasource_streaming(spark, tmp_path):
 
     register_capture_source(spark)
     sink = str(tmp_path / "sink")
-    ckpt = tempfile.mkdtemp(prefix="nfcap_ckpt_")
+    ckpt = new_dir("nfcap_ckpt")
 
     def drain():
         q = (spark.readStream.format("nfcapture").load(out)
@@ -789,11 +788,9 @@ def test_asof_bucketed_equals_plain(spark):
     check()
 
 
-def test_observe_metrics_streaming(spark, sf_dir):
+def test_observe_metrics_streaming(spark, sf_dir, new_dir):
     """operators.monitor under a real stream: per-micro-batch quality
     metrics surface in StreamingQueryProgress.observedMetrics."""
-    import tempfile
-
     from nf2pq_spark.operators.monitor import monitored
     from nf2pq_spark.sources.tables import load_table
     from nf2pq_spark.streaming.jobs import read_events_stream
@@ -801,7 +798,7 @@ def test_observe_metrics_streaming(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir).select("event_id", "value")
     mdf, name = monitored(stream)
     assert isinstance(name, str)
-    ckpt = tempfile.mkdtemp(prefix="obs_ckpt_")
+    ckpt = new_dir("obs_ckpt")
     q = (mdf.writeStream.format("noop")
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())

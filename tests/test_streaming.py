@@ -7,7 +7,6 @@ these aren't oracle-expressible.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pandas as pd
@@ -28,7 +27,7 @@ def _write_chunk(dirname: str, name: str, rows: list[dict], spark):
                    allow_truncated_timestamps=True)
 
 
-def test_watermark_drops_late_rows(spark):
+def test_watermark_drops_late_rows(spark, new_dir):
     """T4: a row arriving after its window's state was evicted is dropped.
 
     Note the exact semantics (verified empirically): the watermark is a
@@ -40,7 +39,7 @@ def test_watermark_drops_late_rows(spark):
     """
     import time
 
-    src = tempfile.mkdtemp(prefix="late_src_")
+    src = new_dir("late_src")
     base = pd.Timestamp("2024-01-01 00:00:00")
     _write_chunk(src, "c1.parquet", [
         {"ts": base + pd.Timedelta(minutes=m), "k": "a"} for m in (5, 10, 80)
@@ -58,7 +57,7 @@ def test_watermark_drops_late_rows(spark):
     agg = (stream.withWatermark("ts", "10 minutes")
            .groupBy(F.window("ts", "1 hour")).agg(F.count(F.lit(1)).alias("n")))
     name = f"late_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="late_ckpt_")
+    ckpt = new_dir("late_ckpt")
     q = (agg.writeStream.format("memory").queryName(name).outputMode("append")
          .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
     q.awaitTermination()
@@ -69,12 +68,12 @@ def test_watermark_drops_late_rows(spark):
     assert rows.get(0) == 2  # late arrival did NOT bump the closed window
 
 
-def test_apply_in_pandas_with_state(spark):
+def test_apply_in_pandas_with_state(spark, new_dir):
     """T6: custom stateful per-key processing — running event count per user
     across micro-batches equals the batch groupBy count."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    src = tempfile.mkdtemp(prefix="state_src_")
+    src = new_dir("state_src")
     base = pd.Timestamp("2024-01-01")
     _write_chunk(src, "c1.parquet",
                  [{"ts": base, "uid": i % 3, "v": float(i)} for i in range(30)], spark)
@@ -100,7 +99,7 @@ def test_apply_in_pandas_with_state(spark):
     assert final == {0: 15, 1: 15, 2: 15}
 
 
-def test_apply_in_pandas_with_state_timeout_evicts(spark):
+def test_apply_in_pandas_with_state_timeout_evicts(spark, new_dir):
     """T6 state-eviction path: a key that stops receiving data must be
     closed out via GroupStateTimeout.ProcessingTimeTimeout — the handler
     runs with hasTimedOut=True and an empty batch iterator, emits the
@@ -118,7 +117,7 @@ def test_apply_in_pandas_with_state_timeout_evicts(spark):
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    src = tempfile.mkdtemp(prefix="state_to_src_")
+    src = new_dir("state_to_src")
     base = pd.Timestamp("2024-01-01")
     # uid 9 appears ONLY in the first chunk; uids 0-2 keep flowing
     _write_chunk(src, "c1.parquet",
@@ -152,7 +151,7 @@ def test_apply_in_pandas_with_state_timeout_evicts(spark):
     name = f"mem_{uuid.uuid4().hex[:12]}"
     q = (result.writeStream.format("memory").queryName(name)
          .outputMode("update")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_to_"))
+         .option("checkpointLocation", new_dir("ckpt_to"))
          .start())
     try:
         deadline = time.time() + 90
@@ -169,7 +168,7 @@ def test_apply_in_pandas_with_state_timeout_evicts(spark):
     assert closed.get(9) == 4
 
 
-def test_transform_with_state_in_pandas(spark):
+def test_transform_with_state_in_pandas(spark, new_dir):
     """T6 (Spark 4 API): transformWithStateInPandas stateful processor —
     per-key running max across micro-batches."""
     try:
@@ -185,7 +184,7 @@ def test_transform_with_state_in_pandas(spark):
         pytest.skip("transformWithStateInPandas needs google.protobuf "
                     "(not installed in this environment)")
 
-    src = tempfile.mkdtemp(prefix="tws_src_")
+    src = new_dir("tws_src")
     base = pd.Timestamp("2024-01-01")
     _write_chunk(src, "c1.parquet",
                  [{"ts": base, "uid": i % 2, "v": float(i)} for i in range(10)], spark)
@@ -227,24 +226,24 @@ def test_transform_with_state_in_pandas(spark):
     assert final == {0: 102.0, 1: 103.0}
 
 
-def test_stream_maintained_rollup(spark, sf_dir):
+def test_stream_maintained_rollup(spark, sf_dir, new_dir):
     """Continuous aggregate maintained from the stream equals the batch
     rollup (operators.rollup)."""
     from nf2pq_spark.operators.rollup import (build_rollup, query_rollup,
                                               stream_maintain_rollup)
 
-    batch_path = tempfile.mkdtemp(prefix="rb_") + "/rollup"
+    batch_path = new_dir("rb") + "/rollup"
     build_rollup(load_table(spark, sf_dir, "events"), batch_path)
-    stream_path = tempfile.mkdtemp(prefix="rs_") + "/rollup"
+    stream_path = new_dir("rs") + "/rollup"
     q = stream_maintain_rollup(read_events_stream(spark, sf_dir), stream_path,
-                               tempfile.mkdtemp(prefix="rck_"))
+                               new_dir("rck"))
     q.awaitTermination()
     b = {tuple(r) for r in query_rollup(spark, batch_path, "day").collect()}
     s = {tuple(r) for r in query_rollup(spark, stream_path, "day").collect()}
     assert b == s
 
 
-def test_stream_maintained_rollup_multi_batch(spark, sf_dir):
+def test_stream_maintained_rollup_multi_batch(spark, sf_dir, new_dir):
     """The regression the one-file fixture hides: a date spanning SEVERAL
     micro-batches must keep every batch's contribution — the old refresh
     overwrote each date partition with only the current batch's rows, so
@@ -258,11 +257,11 @@ def test_stream_maintained_rollup_multi_batch(spark, sf_dir):
     stream = (spark.readStream.schema(_CHUNKED_SCHEMA)
               .option("maxFilesPerTrigger", 1).parquet(src)
               .drop("chunk").withColumn("event_type", F.lit("x")))
-    stream_path = tempfile.mkdtemp(prefix="rs4_") + "/rollup"
+    stream_path = new_dir("rs4") + "/rollup"
     q = stream_maintain_rollup(stream, stream_path,
-                               tempfile.mkdtemp(prefix="rck4_"))
+                               new_dir("rck4"))
     q.awaitTermination()
-    batch_path = tempfile.mkdtemp(prefix="rb4_") + "/rollup"
+    batch_path = new_dir("rb4") + "/rollup"
     batch = (spark.read.parquet(src).drop("chunk")
              .withColumn("event_type", F.lit("x")))
     build_rollup(batch, batch_path)
@@ -286,7 +285,8 @@ def test_chunked_events_dir_keys_cache_on_chunk_count(spark, sf_dir):
     assert len(chunk_dirs(src3)) == 3
     assert len(chunk_dirs(src4)) == 4
 
-def test_compact_rollup_preserves_results_and_guards_layout(spark, sf_dir):
+def test_compact_rollup_preserves_results_and_guards_layout(spark, sf_dir,
+                                                            new_dir):
     """r4 advice: build_rollup targeting a stream-maintained path would
     leave a mixed-depth partition tree (date= vs date=/batch_id=) that
     bricks the next read — it must refuse and point at compact_rollup,
@@ -304,8 +304,8 @@ def test_compact_rollup_preserves_results_and_guards_layout(spark, sf_dir):
     stream = (spark.readStream.schema(_CHUNKED_SCHEMA)
               .option("maxFilesPerTrigger", 1).parquet(src)
               .drop("chunk").withColumn("event_type", F.lit("x")))
-    path = tempfile.mkdtemp(prefix="rc_") + "/rollup"
-    q = stream_maintain_rollup(stream, path, tempfile.mkdtemp(prefix="rcc_"))
+    path = new_dir("rc") + "/rollup"
+    q = stream_maintain_rollup(stream, path, new_dir("rcc"))
     q.awaitTermination()
 
     before = {tuple(r) for r in query_rollup(spark, path, "day").collect()}
@@ -347,15 +347,15 @@ def test_compact_rollup_preserves_results_and_guards_layout(spark, sf_dir):
     # FIXED_LEN_BYTE_ARRAY physical encodings for the same column and
     # every read (query_rollup AND the next compact_rollup) would fail
     # with PARQUET_COLUMN_DATA_TYPE_MISMATCH.
-    extra_src = tempfile.mkdtemp(prefix="rce_") + "/events"
+    extra_src = new_dir("rce") + "/events"
     (batch.limit(700).withColumn("value", F.col("value") * 2)
           .write.parquet(extra_src))
     resumed = (spark.readStream.schema(spark.read.parquet(extra_src).schema)
                .parquet(extra_src))
     q2 = stream_maintain_rollup(resumed, path,
-                                tempfile.mkdtemp(prefix="rcc2_"))
+                                new_dir("rcc2"))
     q2.awaitTermination()
-    expected_path = tempfile.mkdtemp(prefix="rcx_") + "/rollup"
+    expected_path = new_dir("rcx") + "/rollup"
     build_rollup(batch.unionByName(spark.read.parquet(extra_src)),
                  expected_path)
     expected = {tuple(r) for r in
@@ -368,7 +368,7 @@ def test_compact_rollup_preserves_results_and_guards_layout(spark, sf_dir):
             query_rollup(spark, path, "day").collect()} == expected
 
 
-def test_compact_rollup_resumes_interrupted_swap(spark, sf_dir):
+def test_compact_rollup_resumes_interrupted_swap(spark, sf_dir, new_dir):
     """r6 verdict #1: a crash INSIDE compact_rollup's swap window — after
     ``rmtree(path)``, before ``rename(tmp, path)`` — leaves the tmp dir as
     the ONLY complete copy of the table. The old recovery unconditionally
@@ -382,7 +382,7 @@ def test_compact_rollup_resumes_interrupted_swap(spark, sf_dir):
     src = _chunked_events_dir(spark, sf_dir, n_chunks=3)
     batch = (spark.read.parquet(src).drop("chunk")
              .withColumn("event_type", F.lit("x")))
-    path = tempfile.mkdtemp(prefix="rcr_") + "/rollup"
+    path = new_dir("rcr") + "/rollup"
     build_rollup(batch, path)
     expected = {tuple(r) for r in query_rollup(spark, path, "day").collect()}
 
@@ -425,7 +425,7 @@ def test_compact_rollup_resumes_interrupted_swap(spark, sf_dir):
             query_rollup(spark, path, "day").collect()} == expected
 
 
-def test_compact_rollup_three_step_swap_crash_states(spark, sf_dir):
+def test_compact_rollup_three_step_swap_crash_states(spark, sf_dir, new_dir):
     """r7 advice (medium): the old recovery disambiguated purely on
     path-existence, so a crash MID-rmtree(path) — path partially deleted
     but still present — took the 'orphan' branch, deleted tmp (the only
@@ -442,7 +442,7 @@ def test_compact_rollup_three_step_swap_crash_states(spark, sf_dir):
     src = _chunked_events_dir(spark, sf_dir, n_chunks=3)
     batch = (spark.read.parquet(src).drop("chunk")
              .withColumn("event_type", F.lit("x")))
-    path = tempfile.mkdtemp(prefix="rcr3_") + "/rollup"
+    path = new_dir("rcr3") + "/rollup"
     build_rollup(batch, path)
     expected = {tuple(r) for r in query_rollup(spark, path, "day").collect()}
     tmp, old = path + "__compact_tmp", path + "__compact_old"
@@ -489,12 +489,12 @@ def test_compact_rollup_three_step_swap_crash_states(spark, sf_dir):
     check()
 
 
-def test_parquet_rotating_sink_partitions(spark, sf_dir):
+def test_parquet_rotating_sink_partitions(spark, sf_dir, new_dir):
     """S3: the collector's rotated-file sink writes a date/hour-partitioned
     layout that time-range queries can prune."""
     stream = read_events_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="sink_out_") + "/data"
-    ckpt = tempfile.mkdtemp(prefix="sink_ckpt_")
+    out = new_dir("sink_out") + "/data"
+    ckpt = new_dir("sink_ckpt")
     q = parquet_rotating_sink(stream, out, ckpt, available_now=True)
     q.awaitTermination()
     written = spark.read.parquet(out)
@@ -505,11 +505,11 @@ def test_parquet_rotating_sink_partitions(spark, sf_dir):
     assert any(d.startswith("date=") for d in os.listdir(out))
 
 
-def test_foreach_batch_sink_receives_all_rows(spark, sf_dir):
+def test_foreach_batch_sink_receives_all_rows(spark, sf_dir, new_dir):
     """S7 seam: the ClickHouse path's foreachBatch plumbing delivers every
     micro-batch (JDBC writer itself needs a server + driver, absent here)."""
     stream = read_events_stream(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="fb_ckpt_")
+    ckpt = new_dir("fb_ckpt")
     counts = []
     q = foreach_batch_sink(
         stream.select("event_id"),
@@ -536,14 +536,14 @@ def test_clickhouse_ddl_from_flow_schema(spark, sf_dir):
     assert "PARTITION BY toDate(ts_ms / 1000)" in ddl
 
 
-def test_compact_partitions(spark, sf_dir):
+def test_compact_partitions(spark, sf_dir, new_dir):
     """S3 maintenance: the small-file compaction pass preserves data and
     reduces file counts."""
     import glob
 
     from nf2pq_spark.streaming.sinks import compact_partitions, with_partition_columns
 
-    src = tempfile.mkdtemp(prefix="compact_") + "/data"
+    src = new_dir("compact") + "/data"
     ev = with_partition_columns(load_table(spark, sf_dir, "events"))
     # simulate streaming small-file buildup: many partitions per (date,hour)
     ev.repartition(8).write.partitionBy("date", "hour").parquet(src)
@@ -600,7 +600,7 @@ def test_streaming_session_window(spark, sf_dir):
     assert got == expect
 
 
-def test_ipfix_streaming_source(spark, sf_dir):
+def test_ipfix_streaming_source(spark, sf_dir, new_dir):
     """S5/S6 streaming: datagram files consumed as a binaryFile stream
     (foreachBatch two-phase decode) yield the same flows as the batch read."""
     from nf2pq_spark.plans.collector import _datagram_dir
@@ -609,17 +609,17 @@ def test_ipfix_streaming_source(spark, sf_dir):
     path = _datagram_dir(spark, sf_dir, "ipfix")
     batch_n = read_flow_files(spark, path).count()
     got = []
-    ckpt = tempfile.mkdtemp(prefix="flow_ckpt_")
+    ckpt = new_dir("flow_ckpt")
     q = stream_flow_files(spark, path,
                           lambda flows, bid: got.append(flows.count()), ckpt)
     q.awaitTermination()
     assert sum(got) == batch_n == 1000
 
 
-def test_drop_duplicates_within_watermark(spark):
+def test_drop_duplicates_within_watermark(spark, new_dir):
     """T5: dropDuplicatesWithinWatermark dedups re-deliveries inside the
     watermark window while allowing state eviction."""
-    src = tempfile.mkdtemp(prefix="ddww_src_")
+    src = new_dir("ddww_src")
     base = pd.Timestamp("2024-01-01 00:00:00")
     _write_chunk(src, "c1.parquet", [
         {"ts": base, "k": 1}, {"ts": base + pd.Timedelta(seconds=30), "k": 1},
@@ -670,19 +670,19 @@ def test_kafka_flow_stream_builder(spark):
         pytest.skip(f"kafka source unavailable in this env: {type(e).__name__}")
 
 
-def test_checkpoint_restart_exactly_once(spark, sf_dir):
+def test_checkpoint_restart_exactly_once(spark, sf_dir, new_dir):
     """Restart resilience: a stopped stream restarted from the same
     checkpoint must process only files it hasn't committed — exactly-once
     output across the restart boundary (the collector daemon's crash/restart
     contract)."""
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "user_id").toPandas())
-    src = tempfile.mkdtemp(prefix="restart_src_")
+    src = new_dir("restart_src")
     half = len(ev) // 2
     _write_chunk(src, "c0.parquet", ev.iloc[:half].to_dict("records"), spark)
 
-    out = tempfile.mkdtemp(prefix="restart_out_") + "/data"
-    ckpt = tempfile.mkdtemp(prefix="restart_ckpt_")
+    out = new_dir("restart_out") + "/data"
+    ckpt = new_dir("restart_ckpt")
     schema = "event_id long, ts timestamp, user_id long"
 
     def run_leg():
@@ -990,3 +990,43 @@ def test_checkpoint_dedup_salt_uses_checkpoints_filesystem(spark, tmp_path):
         fh.write("legacy0salt0")
     assert _fs_salt_via_hadoop(ck2) == "legacy0salt0"
     assert _checkpoint_dedup_salt(ck2) == "legacy0salt0"
+
+
+#: the queries that write a directory and return a DataFrame reading it back
+SCRATCH_QUERIES = ["s2_partitioned_sink", "st8_streaming_sink_roundtrip",
+                   "st12_foreach_batch_sink", "s9_orc_roundtrip",
+                   "s10_schema_evolution", "st13_capture_stream_sink"]
+
+_SCRATCH_PROBE = r"""
+import json, os, sys
+from nf2pq_spark import plans
+from nf2pq_spark.session import get_spark
+
+spark = get_spark("scratch-owner", cpus=2)
+for name in sys.argv[2:]:
+    assert plans.REGISTRY[name].fn(spark, sys.argv[1]).count() > 0, name
+print(json.dumps(sorted(os.listdir(os.environ["TMPDIR"]))))
+"""
+
+
+def test_query_scratch_directories_leave_with_the_process(tmp_path, sf_dir):
+    """Every directory a query writes and reads back lives under one
+    per-process scratch root, removed when the process exits: after a run
+    of each such query the temp directory holds nothing new (the stamped
+    fixture caches have their own fixed /tmp paths)."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, PYTHONPATH=repo, TMPDIR=str(tmp),
+               SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_PROBE, sf_dir, *SCRATCH_QUERIES],
+        env=env, cwd=repo, capture_output=True, text=True, timeout=900)
+    assert out.returncode == 0, out.stderr[-3000:]
+    during = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(during) == 1 and during[0].startswith("nf2pq_scratch_")
+    assert os.listdir(tmp) == []

@@ -5,7 +5,6 @@ localhost socket."""
 from __future__ import annotations
 
 import socket
-import tempfile
 import time
 
 import pyspark.sql.functions as F
@@ -25,8 +24,8 @@ def _flows(n):
     ]
 
 
-def test_udp_to_spark_roundtrip(spark):
-    out = tempfile.mkdtemp(prefix="bridge_out_")
+def test_udp_to_spark_roundtrip(spark, new_dir):
+    out = new_dir("bridge_out")
     bridge = UdpCaptureBridge("127.0.0.1", 0, out, rotate_seconds=60).start()
     try:
         sender = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
@@ -49,7 +48,7 @@ def test_udp_to_spark_roundtrip(spark):
     assert flows.filter(F.col("dp") == 53).count() == 150
 
 
-def test_idle_exporter_rotates_under_sustained_traffic():
+def test_idle_exporter_rotates_under_sustained_traffic(new_dir):
     """An idle exporter's last capture must rotate to a visible file even
     while ANOTHER exporter keeps the socket busy (the 0.2s recv timeout
     never fires under sustained traffic, so rotation must not depend on
@@ -57,7 +56,7 @@ def test_idle_exporter_rotates_under_sustained_traffic():
     the idle exporter binds 127.0.0.2."""
     import os
 
-    out = tempfile.mkdtemp(prefix="bridge_busy_")
+    out = new_dir("bridge_busy")
     bridge = UdpCaptureBridge("127.0.0.1", 0, out, rotate_seconds=0.3).start()
     try:
         idle = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
@@ -85,10 +84,10 @@ def test_idle_exporter_rotates_under_sustained_traffic():
         bridge.stop()
 
 
-def test_bridge_rotation_produces_multiple_files(spark):
+def test_bridge_rotation_produces_multiple_files(spark, new_dir):
     import os
 
-    out = tempfile.mkdtemp(prefix="bridge_rot_")
+    out = new_dir("bridge_rot")
     bridge = UdpCaptureBridge("127.0.0.1", 0, out, rotate_seconds=0.3).start()
     try:
         sender = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
@@ -107,7 +106,7 @@ def test_bridge_rotation_produces_multiple_files(spark):
     assert read_flow_files(spark, exporter_dir).count() == 90
 
 
-def test_flush_error_does_not_abandon_current_exporter():
+def test_flush_error_does_not_abandon_current_exporter(new_dir):
     """An OSError raised while _flush_expired finalizes ANOTHER
     exporter's capture must not abandon the handle of the exporter whose
     datagram is being written — that orphaned a healthy capture as a
@@ -115,7 +114,7 @@ def test_flush_error_does_not_abandon_current_exporter():
     later datagram instead."""
     import os
 
-    out = tempfile.mkdtemp(prefix="bridge_flusherr_")
+    out = new_dir("bridge_flusherr")
     bridge = UdpCaptureBridge("127.0.0.1", 0, out, rotate_seconds=0.5).start()
     orig_finalize = bridge._finalize
     fails = []
@@ -158,7 +157,7 @@ def test_flush_error_does_not_abandon_current_exporter():
         assert not any(n.endswith(".tmp") for n in names), (exporter, names)
 
 
-def test_rename_failure_retries_same_capture(monkeypatch):
+def test_rename_failure_retries_same_capture(monkeypatch, new_dir):
     """A transient rotation failure (rename raising) must NOT orphan the
     exporter's .tmp: _finalize keeps the entry until the rename SUCCEEDS,
     so a later scan retries committing the SAME capture and none of its
@@ -168,7 +167,7 @@ def test_rename_failure_retries_same_capture(monkeypatch):
 
     from nf2pq_spark.sources import udp_bridge as ub
 
-    out = tempfile.mkdtemp(prefix="bridge_renamefail_")
+    out = new_dir("bridge_renamefail")
     bridge = UdpCaptureBridge("127.0.0.1", 0, out, rotate_seconds=0.3).start()
     real_rename = _os.rename
     fails = []
