@@ -23,6 +23,14 @@ batch's Parquet (``streaming.sinks.task_parquet_batch_writer``), so its
 decoded rows never return to the JVM; other targets get the
 :func:`decode_datagram_frame` frame and Spark's writer.
 
+The v9/IPFIX wire framing lives in three helpers and nowhere else:
+:func:`_message_sets` (the version's header and first-set offset, walked
+by :func:`_iter_sets` into ``(set_id, body_start, set_end)``),
+:func:`_iter_template_records` (template and options-template records)
+and :func:`_varlen_span` (the bounded RFC 7011 §7 length prefix). Every
+decoder, harvester and counter walks messages through them and keeps
+only its own policy (withdrawal, conflict detection, what it surfaces).
+
 Decoding is pure ``struct`` unpacking (PySpark 4.1.2 has no ``F.from_binary``
 — verified), Arrow-batched, linear in bytes: the 100 TB path is "many files,
 many partitions", which binaryFile + mapInPandas already gives.
@@ -153,6 +161,101 @@ def _parse_field_specs(buf: bytes, p: int, n_fields: int,
         fields.append((ie, ln))
     return fields, p
 
+
+# -- wire framing: the only code that knows how sets, template records and
+# §7 length prefixes are laid out; every decoder, harvester and counter
+# walks messages through these --------------------------------------------
+
+#: version → (first-set offset, template set id, options-template set id):
+#: IPFIX (RFC 7011 §3.1) has a 16-byte header, NetFlow v9 (RFC 3954
+#: §5.1) a 20-byte one
+_FRAMING = {10: (16, 2, 3), 9: (_V9_HEADER.size, 0, 1)}
+
+
+def _iter_sets(buf: bytes, off: int, end: int):
+    """Yield ``(set_id, body_start, set_end)`` for the ``(id, length)``-
+    prefixed sets in ``buf[off:end]``; a set's length includes its 4-byte
+    header and is clamped to ``end``. A zero or short length (zero
+    padding read as a set) ends the walk, as does a tail shorter than a
+    set header. Reading a header past the buffer raises ``struct.error``
+    — a v10 message declaring more bytes than it holds fails inside the
+    caller's per-datagram drop."""
+    while off + 4 <= end:
+        set_id, set_len = struct.unpack_from(">HH", buf, off)
+        if set_len < 4:
+            break
+        set_end = min(off + set_len, end)
+        yield set_id, off + 4, set_end
+        off = set_end
+
+
+def _message_sets(buf: bytes):
+    """A v9/IPFIX message → ``(version, template set id, options-template
+    set id, sets)``, ``sets`` being the lazy :func:`_iter_sets` walk of
+    its body: a v10 body ends at the header's DECLARED length, a v9 body
+    at the datagram's end (the v9 header has no byte length). Any other
+    version has no sets."""
+    version = struct.unpack_from(">H", buf, 0)[0]
+    if version not in _FRAMING:
+        return version, -1, -1, iter(())
+    off, tmpl_id, opts_id = _FRAMING[version]
+    end = struct.unpack_from(">H", buf, 2)[0] if version == 10 else len(buf)
+    return version, tmpl_id, opts_id, _iter_sets(buf, off, end)
+
+
+def _iter_template_records(buf: bytes, p: int, set_end: int, version: int,
+                           options: bool = False):
+    """Yield ``(tid, fields)`` for each record of the template set body
+    ``buf[p:set_end]`` (field count 0 = RFC 7011 §8.1 withdrawal, left to
+    the caller). A template record header is (tid, field count). An
+    options-template header is 6 bytes: IPFIX counts fields (plus a scope
+    count, RFC 7011 §3.4.2.2), NetFlow v9 gives the scope and option
+    sections in BYTES (RFC 3954 §6.1); both flatten to one field list,
+    scope first. IPFIX specs honor the enterprise bit
+    (:func:`_parse_field_specs`). Trailing padding shorter than a record
+    header ends the walk."""
+    head = 6 if options else 4
+    while p + head <= set_end:
+        if not options:
+            tid, n_fields = struct.unpack_from(">HH", buf, p)
+        elif version == 10:
+            tid, n_fields, _n_scope = struct.unpack_from(">HHH", buf, p)
+        else:
+            tid, scope_bytes, opt_bytes = struct.unpack_from(">HHH", buf, p)
+            n_fields = (scope_bytes + opt_bytes) // 4
+        fields, p = _parse_field_specs(buf, p + head, n_fields,
+                                       pen=(version == 10))
+        yield tid, fields
+
+
+def _varlen_span(buf: bytes, p: int, end: int) -> tuple[int, int] | None:
+    """RFC 7011 §7 variable-length value at ``p`` (1-byte length prefix,
+    or 255 + u16 for the long form) → ``(value start, value end)``, or
+    None when the prefix or the value would run past ``end`` — callers
+    drop the partial record rather than read the next set's bytes."""
+    if p >= end:
+        return None
+    n = buf[p]
+    p += 1
+    if n == 255:
+        if p + 2 > end:
+            return None
+        (n,) = struct.unpack_from(">H", buf, p)
+        p += 2
+    return (p, p + n) if p + n <= end else None
+
+
+def _store_templates(templates: dict, exporter: str, records) -> None:
+    """Apply ``(tid, fields)`` announcements in wire order: a field count
+    of 0 withdraws the template (RFC 7011 §8.1; v9 exporters use the
+    same convention)."""
+    for tid, fields in records:
+        if fields:
+            templates[(exporter, tid)] = fields
+        else:
+            templates.pop((exporter, tid), None)
+
+
 #: 16-byte address IEs (sourceIPv6Address / destinationIPv6Address)
 _IPV6_IES = {27, 28}
 
@@ -239,21 +342,11 @@ def _decode_subrecords(b: bytes, p: int, end: int,
         bad = False
         for i, (ie, ln) in enumerate(fields):
             if ln == _VARLEN:
-                if p >= end:
+                span = _varlen_span(b, p, end)
+                if span is None:
                     bad = True
                     break
-                n = b[p]
-                p += 1
-                if n == 255:
-                    if p + 2 > end:
-                        bad = True
-                        break
-                    (n,) = struct.unpack_from(">H", b, p)
-                    p += 2
-                if p + n > end:
-                    bad = True
-                    break
-                p += n
+                p = span[1]
                 continue
             if p + ln > end:
                 bad = True
@@ -298,19 +391,13 @@ def _parse_subtemplatemultilist(b: bytes, exporter: str,
     if len(b) < 5:
         return None
     out: dict[int, list[int]] = {}
-    p = 1
-    while p + 4 <= len(b):
-        tid, seg_len = struct.unpack_from(">HH", b, p)
-        if seg_len < 4:
-            break
-        seg_end = min(p + seg_len, len(b))
+    for tid, p, seg_end in _iter_sets(b, 1, len(b)):
         fields = templates.get((exporter, tid))
         if fields:
-            sub = _decode_subrecords(b, p + 4, seg_end, fields)
+            sub = _decode_subrecords(b, p, seg_end, fields)
             if sub:
                 for ie, vs in sub.items():
                     out.setdefault(ie, []).extend(vs)
-        p = seg_end
     return out or None
 
 
@@ -735,7 +822,7 @@ def _decode_ipfix(buf: bytes, exporter: str,
                   templates: dict[tuple[str, int], list[tuple[int, int]]],
                   boots: dict[tuple[str, int], int] | None = None,
                   strings: bool = False) -> list[tuple]:
-    version, length, export_s, _, domain = struct.unpack_from(">HHIII", buf, 0)
+    version, _len, export_s, _, domain = struct.unpack_from(">HHIII", buf, 0)
     assert version == 10
     # exporter clock for sysUpTime-relative templates (IEs 21/22): IPFIX
     # headers carry no sysUptime, so the boot epoch resolves from IE 160
@@ -747,189 +834,152 @@ def _decode_ipfix(buf: bytes, exporter: str,
         if b is not None:
             clk = _v10_era_clock(b, export_s * 1000)
     rows = []
-    off = 16
-    while off + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, off)
-        if set_len < 4:
-            # zero/short set header (zero padding parsed as a set) — the
-            # v9 scalar and every vectorized loop guard this; without it
-            # off never advances and the task spins forever
-            break
-        set_end = off + set_len
-        p = off + 4
-        if set_id == 2:  # template set
-            while p + 4 <= set_end:
-                tid, n_fields = struct.unpack_from(">HH", buf, p)
-                p += 4
-                fields, p = _parse_field_specs(buf, p, n_fields, pen=True)
-                if fields:
-                    templates[(exporter, tid)] = fields
-                else:
-                    # RFC 7011 8.1: field count 0 withdraws the template
-                    templates.pop((exporter, tid), None)
-        elif set_id >= 256:  # data set, decoded via the template cache
-            fields = templates.get((exporter, set_id))
-            if fields is None or not fields:
-                # template not yet seen (or withdrawn) — drop the set
-                p = set_end
-            else:
-                # varlen fields (RFC 7011 §7) contribute their 1-byte
-                # minimum to the walk guard; the per-record scan below
-                # advances by the actual prefixed length. Flow columns
-                # are all fixed-width numerics/addresses, so a varlen
-                # value (URLs, sampler names riding a flow template) is
-                # SKIPPED, not stored — previously the 0xFFFF marker was
-                # summed as a literal width and the whole data set
-                # silently dropped.
-                rec_len = sum(1 if ln == _VARLEN else ln
-                              for _, ln in fields)
-                if rec_len == 0:
-                    off = set_end
-                    continue  # degenerate cached layout: a 0-byte record
-                              # would loop forever below
-                while p + rec_len <= set_end:
-                    vals = {}
-                    svals = None  # IE id -> decoded varlen string
-                    lvals = None  # element IE id -> basicList values
-                    bad = False
-                    for ie, ln in fields:
-                        if ln == _VARLEN:
-                            # every step bounds-checked against set_end:
-                            # an overlong length prefix must discard the
-                            # PARTIAL record and stop this set — never
-                            # decode the next set's bytes as fields, and
-                            # never abort the datagram's other sets
-                            if p >= set_end:
-                                bad = True
-                                break
-                            n = buf[p]
-                            p += 1
-                            if n == 255:  # long form: 255 + u16 length
-                                if p + 2 > set_end:
-                                    bad = True
-                                    break
-                                (n,) = struct.unpack_from(">H", buf, p)
-                                p += 2
-                            if p + n > set_end:
-                                bad = True
-                                break
-                            if strings and ie < _PEN_MARK:
-                                # PEN varlen values (ie >= _PEN_MARK)
-                                # are consumed but never surfaced: the
-                                # str_ies map keys are int32 IANA ids
-                                if ie == _IE_BASICLIST:
-                                    # RFC 6313 structured data: a
-                                    # basicList's packed values keyed
-                                    # by their ELEMENT IE (r12);
-                                    # unsupported shapes parse to None
-                                    # and are skipped, never the record
-                                    parsed = _parse_basiclist(
-                                        buf[p:p + n])
-                                    if parsed is not None:
-                                        if lvals is None:
-                                            lvals = {}
-                                        lvals.setdefault(*parsed)
-                                elif ie in (_IE_STL, _IE_STML):
-                                    # RFC 6313 subTemplateList /
-                                    # subTemplateMultiList (r13): the
-                                    # sub-records flatten column-wise
-                                    # into list_ies keyed by element IE;
-                                    # unsupported shapes (unknown
-                                    # sub-template, nothing
-                                    # surfaceable) skip the FIELD,
-                                    # never the record
-                                    parsed = (_parse_subtemplatelist
-                                              if ie == _IE_STL else
-                                              _parse_subtemplatemultilist)(
-                                        buf[p:p + n], exporter, templates)
-                                    if parsed:
-                                        if lvals is None:
-                                            lvals = {}
-                                        for k, vs in parsed.items():
-                                            lvals.setdefault(k, vs)
-                                else:
-                                    # EVERY varlen string IE is kept,
-                                    # keyed by IE id (r11 verdict item
-                                    # 6 — the old first-only capture
-                                    # silently dropped a template's
-                                    # second string IE); first
-                                    # occurrence per IE wins, matching
-                                    # the fixed-width setdefault rule
-                                    # below
-                                    if svals is None:
-                                        svals = {}
-                                    svals.setdefault(
-                                        ie, buf[p:p + n].decode(
-                                            "utf-8", errors="replace"))
-                            p += n
-                            continue  # fixed-width walk resumes after
-                                      # the prefixed length
-                        if p + ln > set_end:
-                            # only reachable after a varlen field ate
-                            # into the tail (fixed-only templates are
-                            # fully covered by the rec_len guard above)
-                            bad = True
-                            break
-                        if ln == 16 and ie in _IPV6_IES:
-                            v = _ipv6_str(buf[p:p + 16])
-                        elif ln in _IE_UNPACK:
-                            (v,) = struct.unpack_from(_IE_UNPACK[ln], buf, p)
+    _v, tmpl_id, _opts_id, sets = _message_sets(buf)
+    for set_id, p, set_end in sets:
+        if set_id == tmpl_id:
+            _store_templates(templates, exporter,
+                             _iter_template_records(buf, p, set_end, 10))
+            continue
+        # data set, decoded via the template cache; a template not yet
+        # seen (or withdrawn) drops the set
+        fields = templates.get((exporter, set_id)) if set_id >= 256 else None
+        if not fields:
+            continue
+        # varlen fields (RFC 7011 §7) contribute their 1-byte minimum to
+        # the walk guard; the per-record scan below advances by the actual
+        # prefixed length. Flow columns are all fixed-width
+        # numerics/addresses, so a varlen value (URLs, sampler names
+        # riding a flow template) is SKIPPED, not stored — previously the
+        # 0xFFFF marker was summed as a literal width and the whole data
+        # set silently dropped.
+        rec_len = sum(1 if ln == _VARLEN else ln for _, ln in fields)
+        if rec_len == 0:
+            continue  # degenerate cached layout: a 0-byte record would
+                      # loop forever below
+        while p + rec_len <= set_end:
+            vals = {}
+            svals = None  # IE id -> decoded varlen string
+            lvals = None  # element IE id -> basicList values
+            bad = False
+            for ie, ln in fields:
+                if ln == _VARLEN:
+                    # an overlong length prefix must discard the PARTIAL
+                    # record and stop this set — never decode the next
+                    # set's bytes as fields, and never abort the
+                    # datagram's other sets
+                    span = _varlen_span(buf, p, set_end)
+                    if span is None:
+                        bad = True
+                        break
+                    p, p_end = span
+                    # PEN varlen values (ie >= _PEN_MARK) are consumed but
+                    # never surfaced: the str_ies map keys are int32 IANA
+                    # ids
+                    if strings and ie < _PEN_MARK:
+                        if ie == _IE_BASICLIST:
+                            # RFC 6313 structured data: a basicList's
+                            # packed values keyed by their ELEMENT IE
+                            # (r12); unsupported shapes parse to None and
+                            # are skipped, never the record
+                            parsed = _parse_basiclist(buf[p:p_end])
+                            if parsed is not None:
+                                if lvals is None:
+                                    lvals = {}
+                                lvals.setdefault(*parsed)
+                        elif ie in (_IE_STL, _IE_STML):
+                            # RFC 6313 subTemplateList /
+                            # subTemplateMultiList (r13): the sub-records
+                            # flatten column-wise into list_ies keyed by
+                            # element IE; unsupported shapes (unknown
+                            # sub-template, nothing surfaceable) skip the
+                            # FIELD, never the record
+                            parsed = (_parse_subtemplatelist
+                                      if ie == _IE_STL else
+                                      _parse_subtemplatemultilist)(
+                                buf[p:p_end], exporter, templates)
+                            if parsed:
+                                if lvals is None:
+                                    lvals = {}
+                                for k, vs in parsed.items():
+                                    lvals.setdefault(k, vs)
                         else:
-                            # exotic widths (3/6-byte MACs, 16-byte non-v6):
-                            # big-endian int — the widths this scalar path
-                            # exists for must not KeyError the task
-                            v = int.from_bytes(buf[p:p + ln], "big")
-                        # FIRST occurrence of a duplicated IE wins, matching
-                        # the vectorized frames() (first_pos.setdefault) —
-                        # plain assignment was last-wins and made the same
-                        # record decode differently per path
-                        vals.setdefault(ie, v)
-                        p += ln
-                    if bad:
-                        break  # discard the partial record, end this set
-                    # dual-stack: v6 address IEs (27/28) take precedence over
-                    # the v4 ones (8/12) when the template carries them at
-                    # the 16-byte width (then they decoded to a str above);
-                    # a non-16-width IE 27/28 decoded to a plain int and
-                    # must fall back to the v4 IEs exactly like the
-                    # vectorized path, not leak an int into a str column
-                    sa, da = vals.get(27), vals.get(28)
-                    sa = sa if isinstance(sa, str) else _ip_str(vals.get(8, 0))
-                    da = da if isinstance(da, str) else _ip_str(vals.get(12, 0))
+                            # EVERY varlen string IE is kept, keyed by IE
+                            # id (r11 verdict item 6 — the old first-only
+                            # capture silently dropped a template's second
+                            # string IE); first occurrence per IE wins,
+                            # matching the fixed-width setdefault rule
+                            # below
+                            if svals is None:
+                                svals = {}
+                            svals.setdefault(ie, buf[p:p_end].decode(
+                                "utf-8", errors="replace"))
+                    p = p_end
+                    continue  # fixed-width walk resumes after the value
+                if p + ln > set_end:
+                    # only reachable after a varlen field ate into the
+                    # tail (fixed-only templates are fully covered by the
+                    # rec_len guard above)
+                    bad = True
+                    break
+                if ln == 16 and ie in _IPV6_IES:
+                    v = _ipv6_str(buf[p:p + 16])
+                elif ln in _IE_UNPACK:
+                    (v,) = struct.unpack_from(_IE_UNPACK[ln], buf, p)
+                else:
+                    # exotic widths (3/6-byte MACs, 16-byte non-v6):
+                    # big-endian int — the widths this scalar path
+                    # exists for must not KeyError the task
+                    v = int.from_bytes(buf[p:p + ln], "big")
+                # FIRST occurrence of a duplicated IE wins, matching
+                # the vectorized frames() (first_pos.setdefault) —
+                # plain assignment was last-wins and made the same
+                # record decode differently per path
+                vals.setdefault(ie, v)
+                p += ln
+            if bad:
+                break  # discard the partial record, end this set
+            # dual-stack: v6 address IEs (27/28) take precedence over
+            # the v4 ones (8/12) when the template carries them at
+            # the 16-byte width (then they decoded to a str above);
+            # a non-16-width IE 27/28 decoded to a plain int and
+            # must fall back to the v4 IEs exactly like the
+            # vectorized path, not leak an int into a str column
+            sa, da = vals.get(27), vals.get(28)
+            sa = sa if isinstance(sa, str) else _ip_str(vals.get(8, 0))
+            da = da if isinstance(da, str) else _ip_str(vals.get(12, 0))
 
-                    # absolute-ms IEs (152/153) win when the template
-                    # carries them; otherwise the relative IEs (22/21)
-                    # decode through the era clock — same formula and
-                    # _i64 folds as _decode_v9's _rel_abs, so the
-                    # vectorized twin (frames()' rel_abs) stays
-                    # equality-testable. Without a known boot epoch —
-                    # or with NO timestamp IE in the template at all —
-                    # the value is unknowable and stays the 0 sentinel
-                    # (never boot-time), pinned by tests.
-                    def _rel_abs(ie: int) -> int:
-                        era_boot, sys32 = clk
-                        rel = _i64(vals.get(ie, 0))
-                        if _i64(rel - sys32) > 0x80000000:
-                            rel -= 0x100000000
-                        return _i64(era_boot + rel)
+            # absolute-ms IEs (152/153) win when the template
+            # carries them; otherwise the relative IEs (22/21)
+            # decode through the era clock — same formula and
+            # _i64 folds as _decode_v9's _rel_abs, so the
+            # vectorized twin (frames()' rel_abs) stays
+            # equality-testable. Without a known boot epoch —
+            # or with NO timestamp IE in the template at all —
+            # the value is unknowable and stays the 0 sentinel
+            # (never boot-time), pinned by tests.
+            def _rel_abs(ie: int) -> int:
+                era_boot, sys32 = clk
+                rel = _i64(vals.get(ie, 0))
+                if _i64(rel - sys32) > 0x80000000:
+                    rel -= 0x100000000
+                return _i64(era_boot + rel)
 
-                    ts = (_i64(vals[152]) if 152 in vals
-                          else _rel_abs(22) if clk and 22 in vals else 0)
-                    te = (_i64(vals[153]) if 153 in vals
-                          else _rel_abs(21) if clk and 21 in vals else 0)
-                    rows.append((
-                        ts, te, sa, da,
-                        _i32(vals.get(7, 0)), _i32(vals.get(11, 0)),
-                        _i32(vals.get(4, 0)), _i32(vals.get(6, 0)),
-                        _i64(vals.get(2, 0)), _i64(vals.get(1, 0)),
-                        _i32(vals.get(16, 0)), _i32(vals.get(17, 0)), exporter,
-                    ) + (
-                        # app_name = FIRST varlen IE in template order
-                        # (svals preserves field order)
-                        (next(iter(svals.values())) if svals else None,
-                         svals, lvals)
-                        if strings else ()))
-        off = set_end
+            ts = (_i64(vals[152]) if 152 in vals
+                  else _rel_abs(22) if clk and 22 in vals else 0)
+            te = (_i64(vals[153]) if 153 in vals
+                  else _rel_abs(21) if clk and 21 in vals else 0)
+            rows.append((
+                ts, te, sa, da,
+                _i32(vals.get(7, 0)), _i32(vals.get(11, 0)),
+                _i32(vals.get(4, 0)), _i32(vals.get(6, 0)),
+                _i64(vals.get(2, 0)), _i64(vals.get(1, 0)),
+                _i32(vals.get(16, 0)), _i32(vals.get(17, 0)), exporter,
+            ) + (
+                # app_name = FIRST varlen IE in template order
+                # (svals preserves field order)
+                (next(iter(svals.values())) if svals else None,
+                 svals, lvals)
+                if strings else ()))
     return rows
 
 
@@ -1079,27 +1129,6 @@ class _VecAccumulator:
         return out
 
 
-def _parse_template_records(buf: bytes, p: int, set_end: int, exporter: str,
-                            templates: dict, pen: bool = True) -> bool:
-    """Parse one template set into ``templates``; returns True when a tid
-    is announced more than once in the SAME dict with different layouts
-    (used by the pre-scan to detect an in-message layout change, which
-    the order-insensitive vectorized path cannot honor). A field count of
-    0 is stored as [] (RFC 7011 8.1 withdrawal — the caller pops it).
-    ``pen`` selects the IPFIX enterprise-bit spec walk (v10 callers);
-    v9 passes False (see :func:`_parse_field_specs`)."""
-    conflict = False
-    while p + 4 <= set_end:
-        tid, n_fields = struct.unpack_from(">HH", buf, p)
-        p += 4
-        fields, p = _parse_field_specs(buf, p, n_fields, pen)
-        key = (exporter, tid)
-        if key in templates and templates[key] != fields:
-            conflict = True
-        templates[key] = fields
-    return conflict
-
-
 def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
                           acc: _VecAccumulator,
                           boots: dict[tuple[str, int], int] | None = None,
@@ -1113,10 +1142,10 @@ def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
     so v10 templates exporting the relative IEs 21/22 decode through the
     same era clock as v9 headers (None clock → relative IEs stay 0).
     """
-    version = struct.unpack_from(">H", buf, 0)[0]
+    version, tmpl_id, _opts_id, sets = _message_sets(buf)
     if version == 10:
-        _v, length, export_s, _seq, odid = struct.unpack_from(">HHIII", buf, 0)
-        off, tmpl_id, boot_ms, sys_up = 16, 2, None, None
+        _v, _len, export_s, _seq, odid = struct.unpack_from(">HHIII", buf, 0)
+        boot_ms, sys_up = None, None
         if boots:
             b = boots.get((exporter, odid))
             if b is not None:
@@ -1125,7 +1154,6 @@ def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
                     boot_ms, sys_up = clk
     else:
         _v, _c, sys_up, unix_s, _seq, _src = _V9_HEADER.unpack_from(buf, 0)
-        length, off, tmpl_id = len(buf), _V9_HEADER.size, 0
         boot_ms = unix_s * 1000 - sys_up
     cols = [f.name for f in FLOW_SCHEMA.fields]
     # PRE-SCAN: harvest every template set, then check whether any data
@@ -1134,28 +1162,26 @@ def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
     # earlier sets of the same message were already accumulated, so
     # those sets decoded twice (silent duplication of byte/packet
     # counters on mixed-template messages).
-    scan = off
-    msg_templates: dict = {}  # this message's announcements only
+    msg_templates: dict = {}  # this message's announcements only, by tid
     conflict = False
-    data_views: list = []  # (key, layout in effect AT the data set)
-    while scan + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, scan)
-        if set_len < 4:
-            break
-        set_end = min(scan + set_len, length)
+    # (tid, layout in effect AT the data set, body start, set end)
+    data_sets: list = []
+    for set_id, p, set_end in sets:
         if set_id == tmpl_id:
-            conflict |= _parse_template_records(buf, scan + 4, set_end,
-                                                exporter, msg_templates,
-                                                pen=(version == 10))
+            for tid, fields in _iter_template_records(buf, p, set_end,
+                                                      version):
+                # a tid announced twice in this message with different
+                # layouts: the order-insensitive vectorized walk cannot
+                # honor it
+                conflict |= msg_templates.get(tid, fields) != fields
+                msg_templates[tid] = fields
         elif set_id >= 256:
             # the template view at THIS position: announcements so far in
             # this message overlay the pre-message cache ([] withdrawal
             # and absent both mean "no template" for decoding purposes)
-            key = (exporter, set_id)
-            at_pos = (msg_templates[key] if key in msg_templates
-                      else templates.get(key)) or None
-            data_views.append((key, at_pos))
-        scan = set_end
+            at_pos = (msg_templates[set_id] if set_id in msg_templates
+                      else templates.get((exporter, set_id))) or None
+            data_sets.append((set_id, at_pos, p, set_end))
     if not conflict:
         # in-order/end-state equivalence: the decode walk below applies
         # the END-of-message template view to every data set, which is
@@ -1165,72 +1191,42 @@ def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
         # view would decode it retroactively) or FOLLOWED by a
         # withdrawal (scalar decodes it, the end-state view would drop
         # it) must take the in-order scalar walk instead
-        for key, at_pos in data_views:
-            final = (msg_templates[key] if key in msg_templates
-                     else templates.get(key)) or None
-            if final != at_pos:
-                conflict = True
-                break
-    if conflict:
-        # a tid re-announced WITHIN this message with a new layout, or a
-        # data set whose in-position template view differs from the
-        # end-state view: the pre-scan model (templates first, then
-        # data) would apply the wrong layout — only the in-order scalar
-        # walk is correct here. It starts from the pre-message cache
-        # (msg_templates was never merged) and leaves the cache in the
-        # same end state.
+        conflict = any(
+            ((msg_templates[tid] if tid in msg_templates
+              else templates.get((exporter, tid))) or None) != at_pos
+            for tid, at_pos, _p, _end in data_sets)
+    # with no conflict every data set's layout is the final one, so the
+    # pre-scan's view also answers the exotic-width question: widths the
+    # dtype path cannot express send the WHOLE message to the scalar walk
+    if conflict or any(fields is not None and _np_dtype_for(fields) is None
+                       for _tid, fields, _p, _end in data_sets):
+        # the scalar walk starts from the pre-message cache
+        # (msg_templates is not merged yet) and leaves the cache in the
+        # same end state
         rows = (_decode_ipfix(buf, exporter, templates, boots)
                 if version == 10 else _decode_v9(buf, exporter, templates))
         return [pd.DataFrame(rows, columns=cols)]
-    for key, fields in msg_templates.items():
-        if fields:
-            templates[key] = fields
-        else:
-            templates.pop(key, None)  # withdrawal
-    scan = off
-    while scan + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, scan)
-        if set_len < 4:
-            break
-        set_end = min(scan + set_len, length)
-        if set_id >= 256:
-            fields = templates.get((exporter, set_id))
-            if fields is not None and _np_dtype_for(fields) is None:
-                # exotic widths → scalar path for the WHOLE message
-                rows = (_decode_ipfix(buf, exporter, templates, boots)
-                        if version == 10
-                        else _decode_v9(buf, exporter, templates))
-                return [pd.DataFrame(rows, columns=cols)]
-        scan = set_end
-    while off + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, off)
-        if set_len < 4:
-            break
-        set_end = min(off + set_len, length)
-        p = off + 4
-        if set_id >= 256:
-            fields = templates.get((exporter, set_id))
-            if fields:  # empty = withdrawn template: drop the set (a
-                        # 0-itemsize dtype would ZeroDivisionError below,
-                        # which is outside the packet-drop catch)
-                dt = _np_dtype_for(fields)
-                n = (set_end - p) // dt.itemsize
-                if n:
-                    # raw record BYTES, not a frombuffer view — frames()
-                    # joins the slices and runs one frombuffer per
-                    # (template, clock) group; same rationale as the v5
-                    # path (np.concatenate re-promoted the structured
-                    # dtype per input, ~25% of the decode kernel; r13)
-                    raw = buf[p:p + n * dt.itemsize]
-                    if len(raw) != n * dt.itemsize:
-                        # declared header length exceeds the actual bytes
-                        # (v10 `length` is the DECLARED size): the old
-                        # frombuffer(count=n) raised here too — keep the
-                        # error inside the per-datagram drop catch rather
-                        # than deferring a short buffer to frames()
-                        raise ValueError("truncated data set")
-                    acc.add(fields, raw, exporter, boot_ms, sys_up)
-        off = set_end
+    _store_templates(templates, exporter, msg_templates.items())
+    for _tid, fields, p, set_end in data_sets:
+        if fields is None:
+            continue  # no template, or withdrawn: drop the set
+        dt = _np_dtype_for(fields)
+        n = (set_end - p) // dt.itemsize
+        if n:
+            # raw record BYTES, not a frombuffer view — frames() joins the
+            # slices and runs one frombuffer per (template, clock) group;
+            # same rationale as the v5 path (np.concatenate re-promoted
+            # the structured dtype per input, ~25% of the decode kernel;
+            # r13)
+            raw = buf[p:p + n * dt.itemsize]
+            if len(raw) != n * dt.itemsize:
+                # declared header length exceeds the actual bytes (v10
+                # `length` is the DECLARED size): the old
+                # frombuffer(count=n) raised here too — keep the error
+                # inside the per-datagram drop catch rather than
+                # deferring a short buffer to frames()
+                raise ValueError("truncated data set")
+            acc.add(fields, raw, exporter, boot_ms, sys_up)
     return []
 
 
@@ -1335,52 +1331,13 @@ def _parse_options_templates(buf: bytes, exporter: str,
 
     IPFIX (set id 3, RFC 7011 §3.4.2.2) counts fields; NetFlow v9 (set
     id 1, RFC 3954 §6.1) gives scope/option section lengths in BYTES —
-    both shapes normalize to the same flat field list here.
+    :func:`_iter_template_records` normalizes both to a flat field list.
     """
     announced: list[tuple[int, list]] = []
-    version = struct.unpack_from(">H", buf, 0)[0]
-    if version == 10:
-        length = struct.unpack_from(">H", buf, 2)[0]
-        off, opts_id = 16, 3
-    elif version == 9:
-        length, off, opts_id = len(buf), _V9_HEADER.size, 1
-    else:
-        return announced
-    while off + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, off)
-        if set_len < 4:
-            break
-        set_end = min(off + set_len, length)
-        if set_id == opts_id:
-            p = off + 4
-            # a record needs ≥6 bytes of header; trailing padding is shorter
-            while p + 6 <= set_end:
-                tid, fields, p = _parse_one_opt_template(buf, p, version)
-                cache[(exporter, tid)] = fields
-                announced.append((tid, fields))
-        off = set_end
+    for tid, fields in _iter_template_sets(buf, options=True):
+        cache[(exporter, tid)] = fields
+        announced.append((tid, fields))
     return announced
-
-
-def _parse_one_opt_template(buf: bytes, p: int,
-                            version: int) -> tuple[int, list, int]:
-    """One options-template record at ``p`` → (tid, fields, new p).
-
-    The single wire-format authority for both harvest sites
-    (:func:`_parse_options_templates` and the position-sensitive walk in
-    :func:`_v10_record_count`): IPFIX headers count FIELDS, v9 headers
-    give scope/option section lengths in BYTES. IPFIX specs honor the
-    enterprise bit (8-byte PEN specs, RFC 7011 §3.4.2.2 — same rule as
-    flow templates); v9 specs are fixed 4-byte."""
-    if version == 10:
-        tid, n_fields, _n_scope = struct.unpack_from(">HHH", buf, p)
-        n_entries = n_fields
-    else:
-        tid, scope_bytes, opt_bytes = struct.unpack_from(">HHH", buf, p)
-        n_entries = (scope_bytes + opt_bytes) // 4
-    p += 6
-    fields, p = _parse_field_specs(buf, p, n_entries, pen=(version == 10))
-    return tid, fields, p
 
 
 def _opt_num(vals: dict, ie: int, default: int, fold=_i64) -> int:
@@ -1397,51 +1354,45 @@ def _iter_options_vals(buf: bytes, exporter: str, cache: dict):
     """Yield the raw ``{ie: value}`` dict of every options data record in
     one IPFIX or NetFlow v9 message (varlen-aware; varlen only occurs on
     the IPFIX wire). Shared substrate for the sampling-config reader and
-    the IE 160 boot-epoch harvest."""
-    version = struct.unpack_from(">H", buf, 0)[0]
-    if version == 10:
-        length = struct.unpack_from(">H", buf, 2)[0]
-        off = 16
-    elif version == 9:
-        length, off = len(buf), _V9_HEADER.size
-    else:
-        return
-    while off + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, off)
-        if set_len < 4:
-            break
-        set_end = min(off + set_len, length)
+    the IE 160 boot-epoch harvest. A record that would run past its set
+    (an overlong length prefix) is dropped and ends that set, like the
+    flow decoder's: the datagram's other sets still decode."""
+    *_, sets = _message_sets(buf)
+    for set_id, p, set_end in sets:
         fields = cache.get((exporter, set_id)) if set_id >= 256 else None
-        if fields:  # empty = withdrawal; min_len would be 0 and the
-                    # record loop below would never advance p
-            min_len = sum(1 if ln == _VARLEN else ln for _, ln in fields)
-            if min_len == 0:
-                # degenerate cached layout: every field zero-width and
-                # none varlen — a 0-byte record would loop forever below
-                # (the options-path twin of the flow decoders' rec_len==0
-                # guard; same crafted-datagram executor-hang class)
-                off = set_end
-                continue
-            p = off + 4
-            while p + min_len <= set_end:
-                vals: dict[int, object] = {}
-                for ie, ln in fields:
-                    if ln == _VARLEN:
-                        n = buf[p]
-                        p += 1
-                        if n == 255:  # long form
-                            (n,) = struct.unpack_from(">H", buf, p)
-                            p += 2
-                        vals[ie] = buf[p:p + n].decode(errors="replace")
-                        p += n
-                    elif ln in _IE_UNPACK:
-                        (vals[ie],) = struct.unpack_from(_IE_UNPACK[ln], buf, p)
-                        p += ln
-                    else:
-                        vals[ie] = int.from_bytes(buf[p:p + ln], "big")
-                        p += ln
-                yield vals
-        off = set_end
+        if not fields:  # empty = withdrawal; min_len would be 0
+            continue
+        min_len = sum(1 if ln == _VARLEN else ln for _, ln in fields)
+        if min_len == 0:
+            # degenerate cached layout: every field zero-width and none
+            # varlen — a 0-byte record would loop forever below (the
+            # options-path twin of the flow decoders' rec_len==0 guard;
+            # same crafted-datagram executor-hang class)
+            continue
+        while p + min_len <= set_end:
+            vals: dict[int, object] = {}
+            bad = False
+            for ie, ln in fields:
+                if ln == _VARLEN:
+                    span = _varlen_span(buf, p, set_end)
+                    if span is None:
+                        bad = True
+                        break
+                    p, p_end = span
+                    vals[ie] = buf[p:p_end].decode(errors="replace")
+                    p = p_end
+                    continue
+                if p + ln > set_end:
+                    bad = True
+                    break
+                if ln in _IE_UNPACK:
+                    (vals[ie],) = struct.unpack_from(_IE_UNPACK[ln], buf, p)
+                else:
+                    vals[ie] = int.from_bytes(buf[p:p + ln], "big")
+                p += ln
+            if bad:
+                break  # drop the partial record, end this set
+            yield vals
 
 
 def _decode_ipfix_options(buf: bytes, exporter: str,
@@ -1585,28 +1536,21 @@ def _v10_record_count(buf: bytes, exporter: str, templates: dict,
     ``templates`` does for flow templates — a standalone options-data
     message (sampling stats on their own schedule) counts correctly.
     """
-    length = struct.unpack_from(">H", buf, 2)[0]
-    local: dict = {}
+    local: dict[int, list[tuple[int, int]]] = {}
     opt_local: dict[int, list[tuple[int, int]]] = {}
     opt_seed = opt_templates or {}
     n = 0
-    off = 16
-    while off + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, off)
-        if set_len < 4:
-            break
-        set_end = min(off + set_len, length)
-        if set_id == 2:
-            _parse_template_records(buf, off + 4, set_end, exporter, local)
-        elif set_id == 3:
+    version, tmpl_id, opts_id, sets = _message_sets(buf)
+    for set_id, p, set_end in sets:
+        if set_id == tmpl_id:
+            local.update(_iter_template_records(buf, p, set_end, version))
+        elif set_id == opts_id:
             # options template records — only the widths matter here
-            p = off + 4
-            while p + 6 <= set_end:
-                tid, fields, p = _parse_one_opt_template(buf, p, 10)
-                opt_local[tid] = fields
+            opt_local.update(_iter_template_records(buf, p, set_end, version,
+                                                    options=True))
         elif set_id >= 256:
             key = (exporter, set_id)
-            flow_fields = (local[key] if key in local
+            flow_fields = (local[set_id] if set_id in local
                            else templates.get(key)) or None
             # `or None` mirrors the flow side: an explicit options
             # WITHDRAWAL ([]) must not ambiguate a valid flow template
@@ -1620,8 +1564,7 @@ def _v10_record_count(buf: bytes, exporter: str, templates: dict,
             rec_len = sum(ln for _, ln in fields)
             if rec_len == 0:
                 return -1
-            n += (set_end - off - 4) // rec_len
-        off = set_end
+            n += (set_end - p) // rec_len
     return n
 
 
@@ -1711,87 +1654,71 @@ def _decode_v9(buf: bytes, exporter: str,
     assert version == 9
     boot_ms = unix_secs * 1000 - sys_uptime
     rows = []
-    off = _V9_HEADER.size
-    while off + 4 <= len(buf):
-        set_id, set_len = struct.unpack_from(">HH", buf, off)
-        if set_len < 4:
-            break  # malformed padding — stop, keep what we decoded
-        set_end = min(off + set_len, len(buf))
-        p = off + 4
-        if set_id == 0:  # template FlowSet
-            while p + 4 <= set_end:
-                tid, n_fields = struct.unpack_from(">HH", buf, p)
-                p += 4
-                # v9 field specs are always 4 bytes — RFC 3954 has no
-                # enterprise bit (see _parse_field_specs)
-                fields, p = _parse_field_specs(buf, p, n_fields, pen=False)
-                if fields:
-                    templates[(exporter, tid)] = fields
+    _v, tmpl_id, _opts_id, sets = _message_sets(buf)
+    for set_id, p, set_end in sets:
+        if set_id == tmpl_id:
+            # v9 field specs are always 4 bytes — RFC 3954 has no
+            # enterprise bit (see _parse_field_specs)
+            _store_templates(templates, exporter,
+                             _iter_template_records(buf, p, set_end, 9))
+            continue
+        fields = templates.get((exporter, set_id)) if set_id >= 256 else None
+        if not fields:
+            continue  # template not seen / withdrawn — drop the set
+        rec_len = sum(ln for _, ln in fields)
+        if rec_len == 0:
+            continue  # degenerate cached layout — never 0-byte-step
+        while p + rec_len <= set_end:
+            vals = {}
+            for ie, ln in fields:
+                if ln == 16 and ie in _IPV6_IES:
+                    v = _ipv6_str(buf[p:p + 16])
+                elif ln in _IE_UNPACK:
+                    (v,) = struct.unpack_from(_IE_UNPACK[ln], buf, p)
                 else:
-                    # field count 0 = template withdrawal (as in IPFIX)
-                    templates.pop((exporter, tid), None)
-        elif set_id >= 256:
-            fields = templates.get((exporter, set_id))
-            if not fields:
-                p = set_end  # template not seen / withdrawn — drop the set
-            else:
-                rec_len = sum(ln for _, ln in fields)
-                if rec_len == 0:
-                    off = set_end
-                    continue  # degenerate cached layout — never 0-byte-step
-                while p + rec_len <= set_end:
-                    vals = {}
-                    for ie, ln in fields:
-                        if ln == 16 and ie in _IPV6_IES:
-                            v = _ipv6_str(buf[p:p + 16])
-                        elif ln in _IE_UNPACK:
-                            (v,) = struct.unpack_from(
-                                _IE_UNPACK[ln], buf, p)
-                        else:
-                            v = int.from_bytes(buf[p:p + ln], "big")
-                        # first occurrence of a duplicated IE wins — see
-                        # _decode_ipfix (matches frames()' first_pos)
-                        vals.setdefault(ie, v)
-                        p += ln
-                    # _i64 folds both the absolute-ms IEs and the
-                    # boot+uptime sum exactly like the vectorized path's
-                    # int64 arithmetic (numpy wraps silently on overflow).
-                    # The sysUptime-wrap correction (see frames()'s
-                    # rel_abs) folds through _i64 at every step the
-                    # vectorized path wraps in int64, so the differential
-                    # property holds on arbitrary widths too.
-                    def _rel_abs(ie: int) -> int:
-                        rel = _i64(vals.get(ie, 0))
-                        if _i64(rel - sys_uptime) > 0x80000000:
-                            rel -= 0x100000000
-                        return _i64(boot_ms + rel)
+                    v = int.from_bytes(buf[p:p + ln], "big")
+                # first occurrence of a duplicated IE wins — see
+                # _decode_ipfix (matches frames()' first_pos)
+                vals.setdefault(ie, v)
+                p += ln
+            # _i64 folds both the absolute-ms IEs and the
+            # boot+uptime sum exactly like the vectorized path's
+            # int64 arithmetic (numpy wraps silently on overflow).
+            # The sysUptime-wrap correction (see frames()'s
+            # rel_abs) folds through _i64 at every step the
+            # vectorized path wraps in int64, so the differential
+            # property holds on arbitrary widths too.
+            def _rel_abs(ie: int) -> int:
+                rel = _i64(vals.get(ie, 0))
+                if _i64(rel - sys_uptime) > 0x80000000:
+                    rel -= 0x100000000
+                return _i64(boot_ms + rel)
 
-                    # a template with NO timestamp IE keeps the 0
-                    # sentinel — decoding "boot time" for it would be a
-                    # plausible-looking fabrication (same rule on every
-                    # clocked path, so the differential tests hold)
-                    ts = (_i64(vals[152]) if 152 in vals
-                          else _rel_abs(22) if 22 in vals else 0)
-                    te = (_i64(vals[153]) if 153 in vals
-                          else _rel_abs(21) if 21 in vals else 0)
-                    # dual-stack: v6 address IEs (27/28) take precedence,
-                    # mirroring _decode_ipfix and the vectorized path — a
-                    # v9 IPv6 template that falls back to this scalar
-                    # decoder must not render sa/da as '0.0.0.0'; only a
-                    # 16-byte IE decoded to a str counts (a non-16-width
-                    # 27/28 is a plain int -> v4 fallback, like the
-                    # vectorized path)
-                    sa, da = vals.get(27), vals.get(28)
-                    sa = sa if isinstance(sa, str) else _ip_str(vals.get(8, 0))
-                    da = da if isinstance(da, str) else _ip_str(vals.get(12, 0))
-                    rows.append((
-                        ts, te, sa, da,
-                        _i32(vals.get(7, 0)), _i32(vals.get(11, 0)),
-                        _i32(vals.get(4, 0)), _i32(vals.get(6, 0)),
-                        _i64(vals.get(2, 0)), _i64(vals.get(1, 0)),
-                        _i32(vals.get(16, 0)), _i32(vals.get(17, 0)), exporter,
-                    ))
-        off = set_end
+            # a template with NO timestamp IE keeps the 0
+            # sentinel — decoding "boot time" for it would be a
+            # plausible-looking fabrication (same rule on every
+            # clocked path, so the differential tests hold)
+            ts = (_i64(vals[152]) if 152 in vals
+                  else _rel_abs(22) if 22 in vals else 0)
+            te = (_i64(vals[153]) if 153 in vals
+                  else _rel_abs(21) if 21 in vals else 0)
+            # dual-stack: v6 address IEs (27/28) take precedence,
+            # mirroring _decode_ipfix and the vectorized path — a
+            # v9 IPv6 template that falls back to this scalar
+            # decoder must not render sa/da as '0.0.0.0'; only a
+            # 16-byte IE decoded to a str counts (a non-16-width
+            # 27/28 is a plain int -> v4 fallback, like the
+            # vectorized path)
+            sa, da = vals.get(27), vals.get(28)
+            sa = sa if isinstance(sa, str) else _ip_str(vals.get(8, 0))
+            da = da if isinstance(da, str) else _ip_str(vals.get(12, 0))
+            rows.append((
+                ts, te, sa, da,
+                _i32(vals.get(7, 0)), _i32(vals.get(11, 0)),
+                _i32(vals.get(4, 0)), _i32(vals.get(6, 0)),
+                _i64(vals.get(2, 0)), _i64(vals.get(1, 0)),
+                _i32(vals.get(16, 0)), _i32(vals.get(17, 0)), exporter,
+            ))
     return rows
 
 
@@ -1802,32 +1729,15 @@ def _exporter_of(path: str) -> str:
     return path.rsplit("/", 1)[0]
 
 
-def _iter_template_sets(buf: bytes):
-    """Yield (tid, fields) for every template set in an IPFIX or NetFlow v9
-    message (template set id 2 at offset 16 for IPFIX; id 0 at offset 20
-    for v9)."""
-    version = struct.unpack_from(">H", buf, 0)[0]
-    if version == 10:
-        length = struct.unpack_from(">H", buf, 2)[0]
-        off, tmpl_id = 16, 2
-    elif version == 9:
-        length, off, tmpl_id = len(buf), _V9_HEADER.size, 0
-    else:
-        return
-    while off + 4 <= length:
-        set_id, set_len = struct.unpack_from(">HH", buf, off)
-        if set_len < 4:
-            break
-        set_end = min(off + set_len, length)
-        if set_id == tmpl_id:
-            p = off + 4
-            while p + 4 <= set_end:
-                tid, n_fields = struct.unpack_from(">HH", buf, p)
-                p += 4
-                fields, p = _parse_field_specs(buf, p, n_fields,
-                                               pen=(version == 10))
-                yield tid, fields
-        off = set_end
+def _iter_template_sets(buf: bytes, options: bool = False):
+    """Yield ``(tid, fields)`` for every template record — or, with
+    ``options``, every options-template record — announced in an IPFIX
+    or NetFlow v9 message."""
+    version, tmpl_id, opts_id, sets = _message_sets(buf)
+    for set_id, p, set_end in sets:
+        if set_id == (opts_id if options else tmpl_id):
+            yield from _iter_template_records(buf, p, set_end, version,
+                                              options)
 
 
 def _make_template_harvester(opt_seed: dict | None = None,

@@ -75,17 +75,15 @@ def parquet_rotating_sink(stream: DataFrame, path: str, checkpoint: str,
     return writer.start()
 
 
-def compact_partitions(spark, path: str, target_partitions: int = 1) -> None:
+def compact_partitions(spark, path: str) -> None:
     """Rewrite the streaming sink's (date, hour) dataset with one file per
     partition directory, into ``path + "_compacted"``.
 
     Thin wrapper over :func:`nf2pq_spark.operators.compact.compact_parquet`
-    (one compaction implementation to maintain). ``target_partitions`` is
-    accepted for API compatibility but ignored: the old
-    ``repartition(1, date, hour)`` funneled the WHOLE dataset through a
-    single task — at the sink's design scale that is a one-core rewrite of
-    every partition — whereas the hash repartition on (date, hour) gives
-    one file per directory with partitions rewriting in parallel.
+    (one compaction implementation to maintain): the hash repartition on
+    (date, hour) gives one file per directory with partitions rewriting
+    in parallel, where a ``repartition(1, date, hour)`` would funnel the
+    WHOLE dataset through a single task.
     """
     from ..operators.compact import compact_parquet
 

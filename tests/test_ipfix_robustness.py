@@ -15,6 +15,7 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
+import pytest
 
 from nf2pq_spark.sources.ipfix import (FLOW_SCHEMA, _decode_ipfix,
                                        _decode_templated_vec, _decode_v9,
@@ -1888,3 +1889,92 @@ def test_subtemplatelist_empty_records_surface_empty_lists():
     b = encode_subtemplatelist(340, [(7, 2)], [])
     tmpl = {("e1", 340): [(7, 2)]}
     assert _parse_subtemplatelist(b, "e1", tmpl) == {7: []}
+
+
+# -- the shared set walker (_message_sets / _iter_sets) -----------------------
+
+_D8 = _dset(256, b"\x00" * 8)  # one 12-byte data set
+
+
+def _v10_declaring(length: int, body: bytes) -> bytes:
+    return struct.pack(">HHIII", 10, length, 0, 0, 1) + body
+
+
+@pytest.mark.parametrize("msg, sets", [
+    # zero / short set length: zero padding read as a set ends the walk
+    (_ipfix_msg(_D8, struct.pack(">HH", 2, 0), _D8), [(256, 20, 28)]),
+    (_ipfix_msg(struct.pack(">HH", 2, 3), _D8), []),
+    # a set overrunning the declared length is clamped to it
+    (_ipfix_msg(struct.pack(">HH", 256, 40) + b"\x00" * 8),
+     [(256, 20, 28)]),
+    # trailing padding shorter than a set header is not a set
+    (_ipfix_msg(_D8, b"\x00" * 3), [(256, 20, 28)]),
+    # v9 has no byte length: sets run to (and clamp at) the datagram end
+    (_v9_msg(_D8, struct.pack(">HH", 257, 40) + b"\x00" * 6),
+     [(256, 24, 32), (257, 36, 42)]),
+    # a v10 header declaring more bytes than it holds raises at the
+    # first set header past the buffer (inside the per-datagram drop)
+    (_v10_declaring(16 + 12 + 8, _D8), struct.error),
+    # unknown versions have no sets
+    (struct.pack(">HH", 7, 40) + _D8 * 3, []),
+], ids=["zero-length", "short-length", "overruns-declared-length",
+        "short-trailing-padding", "v9-to-datagram-end",
+        "declared-past-buffer", "unknown-version"])
+def test_set_walker_framing(msg, sets):
+    """The one set walk every decoder, harvester and counter uses."""
+    from nf2pq_spark.sources.ipfix import _message_sets
+
+    if isinstance(sets, type):
+        with pytest.raises(sets):
+            list(_message_sets(msg)[3])
+    else:
+        assert list(_message_sets(msg)[3]) == sets
+
+
+def test_options_varlen_overrun_discards_partial_record_not_datagram():
+    """Options twin of test_varlen_overrun_discards_partial_record_not_
+    datagram: a samplerName length prefix claiming more bytes than its
+    set holds drops the PARTIAL record and ends that set — the next
+    set's bytes never land in sampler_name, and the datagram's other
+    sets still decode."""
+    from nf2pq_spark.sources.ipfix import (_decode_ipfix_options,
+                                           _parse_options_templates)
+
+    fields = [(149, 4), (34, 4), (35, 1), (84, 0xFFFF)]
+    body = struct.pack(">HHH", 400, len(fields), 1) + b"".join(
+        struct.pack(">HH", ie, ln) for ie, ln in fields)
+    tmpl_set = struct.pack(">HH", 3, 4 + len(body)) + body
+
+    def rec(dom: int, interval: int, algo: int, name: bytes,
+            claim: int | None = None) -> bytes:
+        n = len(name) if claim is None else claim
+        return struct.pack(">IIBB", dom, interval, algo, n) + name
+
+    msg = _ipfix_msg(tmpl_set,
+                     _dset(400, rec(7, 100, 1, b"abc")
+                           + rec(8, 50, 1, b"ZZ", claim=40)),
+                     _dset(400, rec(9, 200, 2, b"xyz")))
+    cache: dict = {}
+    _parse_options_templates(msg, "e1", cache)
+    assert _decode_ipfix_options(msg, "e1", cache) == [
+        ("e1", 7, 100, 1, "abc"), ("e1", 9, 200, 2, "xyz")]
+
+
+def test_scalar_and_vectorized_agree_on_declared_length_cut():
+    """The v10 header's declared length bounds every set on both decode
+    paths: a message whose declared length cuts its data set short
+    decodes to the same single flow through the scalar walk
+    (decode_strings and the conflict fallback) and the vectorized one."""
+    from nf2pq_spark.sources.ipfix import encode_ipfix
+
+    flows = [dict(sa_int=0x0A000001 + i, da_int=0x0A000002, sp=1000 + i,
+                  dp=53, pr=17, flg=0, ipkt=3, ibyt=300,
+                  ts_ms=1_700_000_000_000, te_ms=1_700_000_000_500,
+                  sas=1, das=2) for i in range(2)]
+    (msg,) = encode_ipfix(flows)
+    length = struct.unpack_from(">H", msg, 2)[0]
+    cut = msg[:2] + struct.pack(">H", length - 10) + msg[4:]
+    scalar = _decode_ipfix(cut, "e1", {})
+    assert len(scalar) == 1
+    assert sorted(scalar) == sorted(
+        tuple(r) for r in _vec_rows(cut).itertuples(index=False))

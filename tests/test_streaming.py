@@ -548,7 +548,7 @@ def test_compact_partitions(spark, sf_dir, new_dir):
     # simulate streaming small-file buildup: many partitions per (date,hour)
     ev.repartition(8).write.partitionBy("date", "hour").parquet(src)
     n_before = len(glob.glob(f"{src}/date=*/hour=*/*.parquet"))
-    compact_partitions(spark, src, target_partitions=1)
+    compact_partitions(spark, src)
     out = src + "_compacted"
     n_after = len(glob.glob(f"{out}/date=*/hour=*/*.parquet"))
     assert n_after < n_before
@@ -560,7 +560,7 @@ def test_compact_partitions(spark, sf_dir, new_dir):
     # (the alias guard would reject it; the wrapper must not get there)
     import shutil
     shutil.rmtree(out)
-    compact_partitions(spark, src + "/", target_partitions=1)
+    compact_partitions(spark, src + "/")
     assert spark.read.parquet(out).count() == ev.count()
     assert not glob.glob(f"{src}/_compacted*")
 
