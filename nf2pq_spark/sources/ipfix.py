@@ -31,6 +31,14 @@ and :func:`_varlen_span` (the bounded RFC 7011 §7 length prefix). Every
 decoder, harvester and counter walks messages through them and keeps
 only its own policy (withdrawal, conflict detection, what it surfaces).
 
+Every version decodes the same way: a message is an exporter clock
+(:func:`_message_clock`) plus (layout, record bytes) pairs, and
+:class:`_VecAccumulator` turns the pairs into flow frames. v5 has one
+built-in layout (:data:`_V5_FIELDS`) and no sets. v9 and IPFIX layouts
+are templates, walked by :func:`_decode_templated_vec`, which hands
+messages a record dtype cannot express to the one in-order walk,
+:func:`_decode_in_order`.
+
 Decoding is pure ``struct`` unpacking (PySpark 4.1.2 has no ``F.from_binary``
 — verified), Arrow-batched, linear in bytes: the 100 TB path is "many files,
 many partitions", which binaryFile + mapInPandas already gives.
@@ -45,7 +53,7 @@ from __future__ import annotations
 import os
 import struct
 from struct import error as _struct_error
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -83,10 +91,9 @@ FLOW_SCHEMA = StructType([
 #: item 6: applicationName + a URL/description-class IE) no longer
 #: silently drops it. Both NULL for records without varlen IEs. Opt-in
 #: via ``read_flow_files(..., with_strings=True)`` — the default decode
-#: keeps the fixed 13-column frame and its vectorized fast paths
-#: (varlen layouts are inherently record-at-a-time: each record's width
-#: depends on its own length prefixes, so the string path takes the
-#: in-order scalar walk).
+#: keeps the fixed 13-column frame (varlen layouts are inherently
+#: record-at-a-time: each record's width depends on its own length
+#: prefixes, so they take the in-order walk on either surface).
 FLOW_STR_SCHEMA = StructType(FLOW_SCHEMA.fields + [
     StructField("app_name", StringType()),
     StructField("str_ies", MapType(IntegerType(), StringType())),
@@ -94,6 +101,8 @@ FLOW_STR_SCHEMA = StructType(FLOW_SCHEMA.fields + [
     # of int values (r12, S6O); NULL for records without one
     StructField("list_ies", MapType(IntegerType(),
                                     ArrayType(LongType())))])
+_FLOW_COLS = FLOW_SCHEMA.names
+_FLOW_STR_COLS = FLOW_STR_SCHEMA.names
 
 _V5_HEADER = struct.Struct(">HHIIIIBBH")   # 24 bytes
 _V5_RECORD = struct.Struct(">IIIHHIIIIHHBBBBHHBBH")  # 48 bytes
@@ -135,9 +144,13 @@ def _pen_key(pen: int, ie_low: int) -> int:
     return _PEN_MARK | (pen << 16) | ie_low
 
 
-def _parse_field_specs(buf: bytes, p: int, n_fields: int,
-                       pen: bool) -> tuple[list[tuple[int, int]], int]:
+def _parse_field_specs(buf: bytes, p: int, n_fields: int, pen: bool,
+                       end: int) -> tuple[list[tuple[int, int]], int]:
     """``n_fields`` template field specs at ``p`` → (fields, new p).
+    Specs running past ``end`` raise ``struct.error``, the per-datagram
+    drop: a record claiming more fields than its set holds would
+    otherwise read the next set's header and records as field specs and
+    cache that bogus layout.
 
     IPFIX (``pen=True``): bit 15 of the field id is the RFC 7011 §3.4.1
     enterprise bit — the spec is then EIGHT bytes (a 4-byte enterprise
@@ -158,6 +171,8 @@ def _parse_field_specs(buf: bytes, p: int, n_fields: int,
             (e,) = struct.unpack_from(">I", buf, p)
             p += 4
             ie = _pen_key(e, ie & 0x7FFF)
+        if p > end:
+            raise struct.error("template record runs past its set")
         fields.append((ie, ln))
     return fields, p
 
@@ -212,8 +227,8 @@ def _iter_template_records(buf: bytes, p: int, set_end: int, version: int,
     count, RFC 7011 §3.4.2.2), NetFlow v9 gives the scope and option
     sections in BYTES (RFC 3954 §6.1); both flatten to one field list,
     scope first. IPFIX specs honor the enterprise bit
-    (:func:`_parse_field_specs`). Trailing padding shorter than a record
-    header ends the walk."""
+    (:func:`_parse_field_specs`, which also bounds the specs by the
+    set). Trailing padding shorter than a record header ends the walk."""
     head = 6 if options else 4
     while p + head <= set_end:
         if not options:
@@ -224,7 +239,7 @@ def _iter_template_records(buf: bytes, p: int, set_end: int, version: int,
             tid, scope_bytes, opt_bytes = struct.unpack_from(">HHH", buf, p)
             n_fields = (scope_bytes + opt_bytes) // 4
         fields, p = _parse_field_specs(buf, p + head, n_fields,
-                                       pen=(version == 10))
+                                       version == 10, set_end)
         yield tid, fields
 
 
@@ -686,41 +701,21 @@ def encode_netflow_v9(flows: list[dict], per_packet: int = 30,
 # ---------------------------------------------------------------------------
 
 
-#: numpy mirror of _V5_RECORD — lets a whole datagram decode as one
-#: frombuffer instead of a per-record Python unpack loop (~10× on the
-#: collector hot path; the scalar _decode_v5 stays as the semantic
-#: reference and both are equality-tested)
-_V5_NP = np.dtype([
-    ("sa", ">u4"), ("da", ">u4"), ("nh", ">u4"), ("inif", ">u2"),
-    ("outif", ">u2"), ("pkts", ">u4"), ("oct", ">u4"), ("first", ">u4"),
-    ("last", ">u4"), ("sp", ">u2"), ("dp", ">u2"), ("p1", "u1"),
-    ("flg", "u1"), ("pr", "u1"), ("tos", "u1"), ("sas", ">u2"),
-    ("das", ">u2"), ("sm", "u1"), ("dm", "u1"), ("p2", ">u2"),
-])
-assert _V5_NP.itemsize == 48
-
-
-def _decode_v5_array(buf: bytes) -> tuple[bytes, int, int]:
-    """One datagram → (raw record bytes, boot_ms, sysUptime).
-
-    v5 first/last are sysUptime-relative uint32 ms (RFC-era semantics
-    shared with v9): the exporter boot epoch is
-    ``unixSecs*1000 + unixNsecs//1e6 − sysUptime`` and rides along so
-    :func:`_v5_frame` can reconstruct absolute ms with the same
-    wraparound correction as the v9 path.
-
-    Record payloads travel as BYTES, not per-datagram numpy views: the
-    frame builder joins the slices and runs ONE ``np.frombuffer`` per
-    batch — ``np.concatenate`` of thousands of small structured arrays
-    re-promoted the dtype per input (profiled ~25% of the whole decode
-    kernel; r13).
-    """
-    _, count, sys_up, unix_s, unix_ns, *_ = _V5_HEADER.unpack_from(buf, 0)
-    nbytes = count * _V5_NP.itemsize
-    if len(buf) < _V5_HEADER.size + nbytes:
-        raise struct.error("truncated v5 datagram")
-    boot_ms = unix_s * 1000 + unix_ns // 1_000_000 - sys_up
-    return (buf[_V5_HEADER.size:_V5_HEADER.size + nbytes], boot_ms, sys_up)
+#: the v5 record (``_V5_RECORD``) as a built-in template of RFC 3954 IE
+#: ids: a v5 datagram's records decode through the same record dtype and
+#: flow-frame pass as a v9/IPFIX data set (:func:`_decode_v5_vec`). Pad
+#: bytes are IE 210 (paddingOctets); next hop, interfaces, ToS and masks
+#: are IEs the flow frame never reads and ride as opaque bytes.
+_V5_FIELDS = (
+    (8, 4), (12, 4), (15, 4),   # srcaddr, dstaddr, nexthop
+    (10, 2), (14, 2),           # input, output ifIndex
+    (2, 4), (1, 4),             # dPkts, dOctets
+    (22, 4), (21, 4),           # First, Last (sysUptime-relative ms)
+    (7, 2), (11, 2), (210, 1),  # srcport, dstport, pad1
+    (6, 1), (4, 1), (5, 1),     # tcp_flags, prot, tos
+    (16, 2), (17, 2),           # src_as, dst_as
+    (9, 1), (13, 1), (210, 2),  # src_mask, dst_mask, pad2
+)
 
 
 #: octet → text lookup tables; indexing + object-array string adds run a
@@ -756,55 +751,41 @@ def _i32(v: int) -> int:
     return v - (1 << 32) if v >= (1 << 31) else v
 
 
-def _v5_frame(chunks: list[tuple[bytes, int, int]],
-              exporters: list[str]) -> pd.DataFrame:
-    """(record bytes, boot_ms, sysUptime) chunks → one flow frame.
+def _message_clock(buf: bytes, exporter: str,
+                   boots: dict[tuple[str, int], int] | None = None
+                   ) -> tuple[int, int] | None:
+    """A v5, v9 or IPFIX message's exporter clock ``(boot_ms,
+    sysUptime ms)``, against which the sysUptime-relative IEs 22/21
+    (FIRST/LAST_SWITCHED) decode; None when it is unknown.
 
-    Absolute ms = boot + first/last, with the identical sysUptime
-    wraparound correction as the v9 ``rel_abs`` (cut at half the uint32
-    range so export skew is not a wrap); the scalar :func:`_decode_v5`
-    folds the same formula through ``_i64`` and the two are
-    equality-tested.
-    """
-    raws = [c[0] for c in chunks]
-    a = np.frombuffer(raws[0] if len(raws) == 1 else b"".join(raws),
-                      dtype=_V5_NP)
-    reps = [len(x) // _V5_NP.itemsize for x in raws]
-    exp = np.repeat(np.array(exporters, dtype=object), reps)
-    boot = np.repeat(np.array([c[1] for c in chunks], dtype="int64"), reps)
-    sysup = np.repeat(np.array([c[2] for c in chunks], dtype="int64"), reps)
-
-    def rel_abs(col: str) -> np.ndarray:
-        rel = a[col].astype("int64")
-        wrapped = (rel - sysup) > 0x80000000
-        return boot + np.where(wrapped, rel - 0x100000000, rel)
-
-    return pd.DataFrame({
-        "ts_ms": rel_abs("first"),
-        "te_ms": rel_abs("last"),
-        "sa": _ip_strs(a["sa"].astype("uint32")),
-        "da": _ip_strs(a["da"].astype("uint32")),
-        "sp": a["sp"].astype("int32"),
-        "dp": a["dp"].astype("int32"),
-        "pr": a["pr"].astype("int32"),
-        "flg": a["flg"].astype("int32"),
-        "ipkt": a["pkts"].astype("int64"),
-        "ibyt": a["oct"].astype("int64"),
-        "sas": a["sas"].astype("int32"),
-        "das": a["das"].astype("int32"),
-        "exporter": exp,
-    })
+    v5 and v9 headers carry sysUptime and the export wall clock (v5 adds
+    nanoseconds). An IPFIX header carries only the export time, so its
+    clock needs the exporter's IE 160 boot epoch from ``boots``, keyed
+    (exporter, observation domain) and folded into the stamps' wrap era
+    (:func:`_v10_era_clock`)."""
+    version = struct.unpack_from(">H", buf, 0)[0]
+    if version == 5:
+        _v, _c, sys_up, unix_s, unix_ns, *_ = _V5_HEADER.unpack_from(buf, 0)
+        return unix_s * 1000 + unix_ns // 1_000_000 - sys_up, sys_up
+    if version == 9:
+        _v, _c, sys_up, unix_s, _seq, _src = _V9_HEADER.unpack_from(buf, 0)
+        return unix_s * 1000 - sys_up, sys_up
+    _v, _len, export_s, _seq, odid = struct.unpack_from(">HHIII", buf, 0)
+    boot = boots.get((exporter, odid)) if boots else None
+    return None if boot is None else _v10_era_clock(boot, export_s * 1000)
 
 
 def _decode_v5(buf: bytes, exporter: str) -> list[tuple]:
-    _, count, sys_up, unix_s, unix_ns, *_ = _V5_HEADER.unpack_from(buf, 0)
-    boot_ms = unix_s * 1000 + unix_ns // 1_000_000 - sys_up
+    """v5 datagram → flow tuples, one record at a time: the scalar
+    reference that :func:`_decode_v5_vec` is equality-tested against."""
+    count = _V5_HEADER.unpack_from(buf, 0)[1]
+    boot_ms, sys_up = _message_clock(buf, exporter)
     rows = []
     off = _V5_HEADER.size
 
     def rel_abs(rel: int) -> int:
-        # wraparound twin of _v5_frame's rel_abs — folded through _i64
-        # at every step the vectorized path wraps in int64
+        # wraparound twin of _VecAccumulator's rel_abs — folded through
+        # _i64 at every step the vectorized path wraps in int64
         if _i64(rel - sys_up) > 0x80000000:
             rel -= 0x100000000
         return _i64(boot_ms + rel)
@@ -818,32 +799,41 @@ def _decode_v5(buf: bytes, exporter: str) -> list[tuple]:
     return rows
 
 
-def _decode_ipfix(buf: bytes, exporter: str,
-                  templates: dict[tuple[str, int], list[tuple[int, int]]],
-                  boots: dict[tuple[str, int], int] | None = None,
-                  strings: bool = False) -> list[tuple]:
-    version, _len, export_s, _, domain = struct.unpack_from(">HHIII", buf, 0)
-    assert version == 10
-    # exporter clock for sysUpTime-relative templates (IEs 21/22): IPFIX
-    # headers carry no sysUptime, so the boot epoch resolves from IE 160
-    # options per (exporter, odid); era-folded so the SAME rel_abs wrap
-    # arithmetic as the v9 path applies (see _v10_era_clock)
-    clk = None
-    if boots:
-        b = boots.get((exporter, domain))
-        if b is not None:
-            clk = _v10_era_clock(b, export_s * 1000)
+def _decode_in_order(buf: bytes, exporter: str,
+                     templates: dict[tuple[str, int], list[tuple[int, int]]],
+                     boots: dict[tuple[str, int], int] | None = None,
+                     strings: bool = False) -> list[tuple]:
+    """NetFlow v9 or IPFIX message → flow tuples, set by set and record
+    by record in wire order (RFC 3954, RFC 7011).
+
+    Template sets update ``templates`` where they stand, so each data set
+    decodes under the layout in effect at its position. This walk is the
+    reference that the vectorized :func:`_decode_templated_vec` is
+    differential-tested against, and its fallback for what a record
+    dtype cannot express: variable-length fields, unusual widths and a
+    template changed inside the message. It folds every numeric output
+    through its own :func:`_i64` / :func:`_i32`, independent of the numpy
+    arithmetic it checks. The clock is :func:`_message_clock`'s. With
+    ``strings`` each row also carries the FLOW_STR_SCHEMA columns
+    (app_name, str_ies, list_ies).
+    """
+    version, tmpl_id, _opts_id, sets = _message_sets(buf)
+    clk = _message_clock(buf, exporter, boots)
     rows = []
-    _v, tmpl_id, _opts_id, sets = _message_sets(buf)
     for set_id, p, set_end in sets:
         if set_id == tmpl_id:
             _store_templates(templates, exporter,
-                             _iter_template_records(buf, p, set_end, 10))
+                             _iter_template_records(buf, p, set_end,
+                                                    version))
             continue
         # data set, decoded via the template cache; a template not yet
         # seen (or withdrawn) drops the set
         fields = templates.get((exporter, set_id)) if set_id >= 256 else None
         if not fields:
+            continue
+        if version == 9 and any(ln == _VARLEN for _, ln in fields):
+            # RFC 3954 has no variable-length encoding: 65535 is a
+            # literal width, longer than any set, so no record fits
             continue
         # varlen fields (RFC 7011 §7) contribute their 1-byte minimum to
         # the walk guard; the per-record scan below advances by the actual
@@ -950,19 +940,18 @@ def _decode_ipfix(buf: bytes, exporter: str,
 
             # absolute-ms IEs (152/153) win when the template
             # carries them; otherwise the relative IEs (22/21)
-            # decode through the era clock — same formula and
-            # _i64 folds as _decode_v9's _rel_abs, so the
-            # vectorized twin (frames()' rel_abs) stays
-            # equality-testable. Without a known boot epoch —
-            # or with NO timestamp IE in the template at all —
-            # the value is unknowable and stays the 0 sentinel
-            # (never boot-time), pinned by tests.
+            # decode through the message clock, folded through _i64
+            # at every step the vectorized twin (frames()' rel_abs)
+            # wraps in int64, so the two stay equality-testable.
+            # Without a known clock — or with NO timestamp IE in the
+            # template at all — the value is unknowable and stays the
+            # 0 sentinel (never boot-time), pinned by tests.
             def _rel_abs(ie: int) -> int:
-                era_boot, sys32 = clk
+                boot, sys_up = clk
                 rel = _i64(vals.get(ie, 0))
-                if _i64(rel - sys32) > 0x80000000:
+                if _i64(rel - sys_up) > 0x80000000:
                     rel -= 0x100000000
-                return _i64(era_boot + rel)
+                return _i64(boot + rel)
 
             ts = (_i64(vals[152]) if 152 in vals
                   else _rel_abs(22) if clk and 22 in vals else 0)
@@ -983,16 +972,21 @@ def _decode_ipfix(buf: bytes, exporter: str,
     return rows
 
 
-# -- vectorized template-driven decode ---------------------------------------
+# -- vectorized layout-driven decode -----------------------------------------
 #
-# The v5 fast path (fixed layout → one np.frombuffer) generalizes to any
-# template whose fields are 1/2/4/8-byte ints or 16-byte addresses: the
-# template itself defines a numpy structured dtype, so a whole data set
-# decodes as one frombuffer instead of a per-record struct.unpack loop
-# (~10× on the IPFIX hot path; scalar decoders remain as the semantic
-# reference and the two are equality-tested).
+# A layout whose fields are 1/2/4/8-byte ints, 16-byte addresses or bytes
+# the flow frame never reads defines a numpy structured dtype, so a whole
+# v5 datagram or v9/IPFIX data set decodes as one frombuffer instead of a
+# per-record struct.unpack loop (~10× on the collector hot path; the
+# scalar decoders remain as the semantic reference and the two are
+# equality-tested).
 
 _DTYPE_CACHE: dict[tuple, "np.dtype | None"] = {}
+
+#: the IEs the flow frame reads; every other IE's value is carried past
+#: and never surfaced
+_FLOW_IES = frozenset({1, 2, 4, 6, 7, 8, 11, 12, 16, 17, 21, 22, 27, 28,
+                       152, 153})
 
 
 def _np_dtype_for(fields: list[tuple[int, int]]):
@@ -1000,19 +994,19 @@ def _np_dtype_for(fields: list[tuple[int, int]]):
     if key not in _DTYPE_CACHE:
         parts = []
         for i, (ie, ln) in enumerate(fields):
-            if ie >= _PEN_MARK and 0 < ln < _VARLEN:
-                # enterprise-numbered IE: its value is never surfaced,
-                # so ANY fixed width rides the frombuffer fast path as
-                # opaque padding — vendor IEs (routine in real IPFIX)
-                # must not knock the whole message off vectorization.
-                # ln == 0 falls through to the scalar path, whose
-                # rec_len == 0 guard handles the degenerate layout.
+            if ie not in _FLOW_IES and 0 < ln < _VARLEN:
+                # an IE the flow frame never reads (vendor PEN IEs, MAC
+                # addresses, v5 padding...): ANY fixed width rides the
+                # frombuffer fast path as opaque bytes, so it must not
+                # knock the whole message off vectorization. ln == 0
+                # falls through to the in-order walk, whose rec_len == 0
+                # guard handles the degenerate layout.
                 parts.append((f"p{i}", f"V{ln}"))
             elif ln in (1, 2, 4, 8):
                 parts.append((f"p{i}", f">u{ln}"))
             elif ln == 16 and ie in _IPV6_IES:
                 # 16 bytes is renderable only as a v6 address; any other
-                # 16-byte IE goes to the scalar path (big-endian int
+                # 16-byte IE goes to the in-order walk (big-endian int
                 # there) instead of crashing frames()' int64 cast
                 parts.append((f"p{i}", "V16"))
             else:
@@ -1024,25 +1018,23 @@ def _np_dtype_for(fields: list[tuple[int, int]]):
 
 
 class _VecAccumulator:
-    """Collects raw per-data-set record arrays and materializes ONE flow
-    frame per (template, exporter-mode) at the end of the batch — building
-    a pandas frame per 30-record set would cost more than the scalar loop
-    (measured 5× slower); one concat + one column pass per template wins.
+    """Collects raw record bytes with their exporter and clock, and
+    materializes ONE flow frame per (layout, has-clock) at the end of the
+    batch — building a pandas frame per 30-record set would cost more
+    than the scalar loop (measured 5× slower); one concat + one column
+    pass per layout wins.
     """
 
     def __init__(self):
         #: (fields, has exporter clock?) →
-        #:     [(raw record bytes, exporter, boot_ms, sys_uptime_ms), ...]
-        #: the clock is the v9 header's (boot, sysUptime) or a v10
-        #: IE 160 era clock (_v10_era_clock) — same rel_abs arithmetic
+        #:     [(raw record bytes, exporter, clock), ...]
+        #: the clock is :func:`_message_clock`'s (boot_ms, sysUptime)
         self._groups: dict[tuple, list] = {}
 
-    def add(self, fields: list[tuple[int, int]], raw: bytes,
-            exporter: str, boot_ms: int | None,
-            sys_uptime: int | None = None) -> None:
-        key = (tuple(fields), boot_ms is not None)
-        self._groups.setdefault(key, []).append(
-            (raw, exporter, boot_ms, sys_uptime))
+    def add(self, fields: Sequence[tuple[int, int]], raw: bytes,
+            exporter: str, clock: tuple[int, int] | None) -> None:
+        key = (tuple(fields), clock is not None)
+        self._groups.setdefault(key, []).append((raw, exporter, clock))
 
     def frames(self) -> list[pd.DataFrame]:
         out = []
@@ -1067,30 +1059,21 @@ class _VecAccumulator:
                     return np.zeros(n, dtype="int64")
                 return a[f"p{i}"].astype("int64")
 
-            def v6_pos(ie: int):
-                i = first_pos.get(ie)
-                return i if i is not None and fields[i][1] == 16 else None
-
-            i27, i28 = v6_pos(27), v6_pos(28)
-            if i27 is not None:
-                sa = np.array([_ipv6_str(bytes(x))
-                               for x in a[f"p{i27}"]], dtype=object)
-            else:
-                sa = _ip_strs(col(8).astype("uint32"))
-            if i28 is not None:
-                da = np.array([_ipv6_str(bytes(x))
-                               for x in a[f"p{i28}"]], dtype=object)
-            else:
-                da = _ip_strs(col(12).astype("uint32"))
+            def addr(v6_ie: int, v4_ie: int) -> np.ndarray:
+                # dual-stack: a 16-byte v6 address IE wins over the v4 one
+                i = first_pos.get(v6_ie)
+                if i is not None and fields[i][1] == 16:
+                    return np.array([_ipv6_str(bytes(x))
+                                     for x in a[f"p{i}"]], dtype=object)
+                return _ip_strs(col(v4_ie).astype("uint32"))
             if has_clock:  # sysUptime-relative FIRST/LAST_SWITCHED against
-                           # the per-message clock (v9 header, or v10 IE
-                           # 160 era clock), unless the template exports
-                           # the absolute ms IEs (152/153) — the scalar
-                           # reference prefers those
+                           # the per-message clock, unless the layout
+                           # exports the absolute ms IEs (152/153) — the
+                           # scalar reference prefers those
                 boot = np.repeat(
-                    np.array([c[2] for c in chunks], dtype="int64"), reps)
+                    np.array([c[2][0] for c in chunks], dtype="int64"), reps)
                 sysup = np.repeat(
-                    np.array([c[3] for c in chunks], dtype="int64"), reps)
+                    np.array([c[2][1] for c in chunks], dtype="int64"), reps)
 
                 def rel_abs(ie: int) -> np.ndarray:
                     # sysUptime wraparound (RFC 3954): both sysUptime and
@@ -1107,7 +1090,7 @@ class _VecAccumulator:
                     wrapped = (rel - sysup) > 0x80000000
                     return boot + np.where(wrapped, rel - 0x100000000, rel)
 
-                # no timestamp IE in the template → zeros sentinel, not
+                # no timestamp IE in the layout → zeros sentinel, not
                 # boot-time (col() of an absent IE is zeros already)
                 ts = (col(152) if 152 in first_pos
                       else rel_abs(22) if 22 in first_pos else col(152))
@@ -1118,7 +1101,8 @@ class _VecAccumulator:
                        # undecodable and stay 0 — pinned by tests
                 ts, te = col(152), col(153)
             out.append(pd.DataFrame({
-                "ts_ms": ts, "te_ms": te, "sa": sa, "da": da,
+                "ts_ms": ts, "te_ms": te, "sa": addr(27, 8),
+                "da": addr(28, 12),
                 "sp": col(7).astype("int32"), "dp": col(11).astype("int32"),
                 "pr": col(4).astype("int32"), "flg": col(6).astype("int32"),
                 "ipkt": col(2), "ibyt": col(1),
@@ -1129,35 +1113,47 @@ class _VecAccumulator:
         return out
 
 
+def _decode_v5_vec(buf: bytes, exporter: str, acc: _VecAccumulator) -> None:
+    """v5 datagram → its records into ``acc`` under the built-in
+    :data:`_V5_FIELDS` layout with the header clock. A v5 datagram is one
+    fixed-layout run of ``count`` records, so there is no set walk.
+
+    Records travel as raw BYTES, not per-datagram numpy views:
+    :meth:`_VecAccumulator.frames` joins the slices and runs ONE
+    ``np.frombuffer`` per layout — ``np.concatenate`` of thousands of
+    small structured arrays re-promoted the dtype per input (profiled
+    ~25% of the whole decode kernel; r13)."""
+    clock = _message_clock(buf, exporter)
+    nbytes = struct.unpack_from(">H", buf, 2)[0] * _V5_RECORD.size
+    raw = buf[_V5_HEADER.size:_V5_HEADER.size + nbytes]
+    if len(raw) != nbytes:
+        raise struct.error("truncated v5 datagram")
+    acc.add(_V5_FIELDS, raw, exporter, clock)
+
+
 def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
                           acc: _VecAccumulator,
                           boots: dict[tuple[str, int], int] | None = None,
-                          ) -> list["pd.DataFrame"]:
-    """v9 / IPFIX datagram → record-array chunks into ``acc`` (vectorized).
+                          strings: bool = False) -> list["pd.DataFrame"]:
+    """v9 / IPFIX message → record bytes into ``acc`` (vectorized), or
+    the :func:`_decode_in_order` walk of the whole message when a record
+    dtype cannot honor it.
 
-    Templates are harvested in document order (in-band announcement before
-    use within a message works). Returns scalar-fallback frames for
-    messages whose template has widths the dtype path can't express
-    (normally empty). ``boots`` maps (exporter, odid) → IE 160 boot epoch
-    so v10 templates exporting the relative IEs 21/22 decode through the
-    same era clock as v9 headers (None clock → relative IEs stay 0).
+    Templates are harvested in document order (in-band announcement
+    before use within a message works). The in-order walk takes messages
+    with a variable-length field, a width the dtype cannot express, or a
+    data set whose template view differs from the end-of-message view;
+    its rows come back as frames (normally none), with the
+    FLOW_STR_SCHEMA columns when ``strings``. The clock is
+    :func:`_message_clock`'s: ``boots`` maps (exporter, odid) → IE 160
+    boot epoch so v10 templates exporting the relative IEs 21/22 decode
+    through the same arithmetic as v9 headers (None clock → relative
+    IEs stay 0).
     """
     version, tmpl_id, _opts_id, sets = _message_sets(buf)
-    if version == 10:
-        _v, _len, export_s, _seq, odid = struct.unpack_from(">HHIII", buf, 0)
-        boot_ms, sys_up = None, None
-        if boots:
-            b = boots.get((exporter, odid))
-            if b is not None:
-                clk = _v10_era_clock(b, export_s * 1000)
-                if clk is not None:
-                    boot_ms, sys_up = clk
-    else:
-        _v, _c, sys_up, unix_s, _seq, _src = _V9_HEADER.unpack_from(buf, 0)
-        boot_ms = unix_s * 1000 - sys_up
-    cols = [f.name for f in FLOW_SCHEMA.fields]
+    clock = _message_clock(buf, exporter, boots)
     # PRE-SCAN: harvest every template set, then check whether any data
-    # set needs the scalar path — BEFORE anything enters acc. The old
+    # set needs the in-order walk — BEFORE anything enters acc. The old
     # form bailed to a whole-message scalar decode mid-loop, after
     # earlier sets of the same message were already accumulated, so
     # those sets decoded twice (silent duplication of byte/packet
@@ -1187,25 +1183,25 @@ def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
         # the END-of-message template view to every data set, which is
         # only correct when that view matches what was in effect at each
         # data set's position — a data set PRECEDING its announcement
-        # (RFC 7011 §8 violation: scalar rightly drops it, the end-state
-        # view would decode it retroactively) or FOLLOWED by a
-        # withdrawal (scalar decodes it, the end-state view would drop
-        # it) must take the in-order scalar walk instead
+        # (RFC 7011 §8 violation: the in-order walk rightly drops it, the
+        # end-state view would decode it retroactively) or FOLLOWED by a
+        # withdrawal (the in-order walk decodes it, the end-state view
+        # would drop it) must take the in-order walk instead
         conflict = any(
             ((msg_templates[tid] if tid in msg_templates
               else templates.get((exporter, tid))) or None) != at_pos
             for tid, at_pos, _p, _end in data_sets)
     # with no conflict every data set's layout is the final one, so the
     # pre-scan's view also answers the exotic-width question: widths the
-    # dtype path cannot express send the WHOLE message to the scalar walk
+    # dtype path cannot express send the WHOLE message to the in-order walk
     if conflict or any(fields is not None and _np_dtype_for(fields) is None
                        for _tid, fields, _p, _end in data_sets):
-        # the scalar walk starts from the pre-message cache
+        # the in-order walk starts from the pre-message cache
         # (msg_templates is not merged yet) and leaves the cache in the
         # same end state
-        rows = (_decode_ipfix(buf, exporter, templates, boots)
-                if version == 10 else _decode_v9(buf, exporter, templates))
-        return [pd.DataFrame(rows, columns=cols)]
+        rows = _decode_in_order(buf, exporter, templates, boots, strings)
+        return [pd.DataFrame(rows, columns=(_FLOW_STR_COLS if strings
+                                            else _FLOW_COLS))]
     _store_templates(templates, exporter, msg_templates.items())
     for _tid, fields, p, set_end in data_sets:
         if fields is None:
@@ -1213,11 +1209,7 @@ def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
         dt = _np_dtype_for(fields)
         n = (set_end - p) // dt.itemsize
         if n:
-            # raw record BYTES, not a frombuffer view — frames() joins the
-            # slices and runs one frombuffer per (template, clock) group;
-            # same rationale as the v5 path (np.concatenate re-promoted
-            # the structured dtype per input, ~25% of the decode kernel;
-            # r13)
+            # raw record BYTES, as in _decode_v5_vec
             raw = buf[p:p + n * dt.itemsize]
             if len(raw) != n * dt.itemsize:
                 # declared header length exceeds the actual bytes (v10
@@ -1226,7 +1218,7 @@ def _decode_templated_vec(buf: bytes, exporter: str, templates: dict,
                 # inside the per-datagram drop catch rather than
                 # deferring a short buffer to frames()
                 raise ValueError("truncated data set")
-            acc.add(fields, raw, exporter, boot_ms, sys_up)
+            acc.add(fields, raw, exporter, clock)
     return []
 
 
@@ -1639,89 +1631,6 @@ def read_message_headers(spark, path: str) -> DataFrame:
         MESSAGE_HEADER_SCHEMA)
 
 
-def _decode_v9(buf: bytes, exporter: str,
-               templates: dict[tuple[str, int], list[tuple[int, int]]]) -> list[tuple]:
-    """NetFlow v9 datagram → flow tuples (RFC 3954).
-
-    Shares the (exporter, template-id) cache with IPFIX: v9 template ids
-    live at ≥256 like IPFIX's, and the field-type numbering is the IPFIX
-    low range. The differences handled here: 20-byte header with no byte
-    length (flowsets run to end of datagram), template FlowSet id 0, and
-    sysUptime-relative FIRST/LAST_SWITCHED timestamps converted to absolute
-    ms via the header's (unixSecs, sysUptime) boot epoch.
-    """
-    version, _count, sys_uptime, unix_secs, _seq, _src = _V9_HEADER.unpack_from(buf, 0)
-    assert version == 9
-    boot_ms = unix_secs * 1000 - sys_uptime
-    rows = []
-    _v, tmpl_id, _opts_id, sets = _message_sets(buf)
-    for set_id, p, set_end in sets:
-        if set_id == tmpl_id:
-            # v9 field specs are always 4 bytes — RFC 3954 has no
-            # enterprise bit (see _parse_field_specs)
-            _store_templates(templates, exporter,
-                             _iter_template_records(buf, p, set_end, 9))
-            continue
-        fields = templates.get((exporter, set_id)) if set_id >= 256 else None
-        if not fields:
-            continue  # template not seen / withdrawn — drop the set
-        rec_len = sum(ln for _, ln in fields)
-        if rec_len == 0:
-            continue  # degenerate cached layout — never 0-byte-step
-        while p + rec_len <= set_end:
-            vals = {}
-            for ie, ln in fields:
-                if ln == 16 and ie in _IPV6_IES:
-                    v = _ipv6_str(buf[p:p + 16])
-                elif ln in _IE_UNPACK:
-                    (v,) = struct.unpack_from(_IE_UNPACK[ln], buf, p)
-                else:
-                    v = int.from_bytes(buf[p:p + ln], "big")
-                # first occurrence of a duplicated IE wins — see
-                # _decode_ipfix (matches frames()' first_pos)
-                vals.setdefault(ie, v)
-                p += ln
-            # _i64 folds both the absolute-ms IEs and the
-            # boot+uptime sum exactly like the vectorized path's
-            # int64 arithmetic (numpy wraps silently on overflow).
-            # The sysUptime-wrap correction (see frames()'s
-            # rel_abs) folds through _i64 at every step the
-            # vectorized path wraps in int64, so the differential
-            # property holds on arbitrary widths too.
-            def _rel_abs(ie: int) -> int:
-                rel = _i64(vals.get(ie, 0))
-                if _i64(rel - sys_uptime) > 0x80000000:
-                    rel -= 0x100000000
-                return _i64(boot_ms + rel)
-
-            # a template with NO timestamp IE keeps the 0
-            # sentinel — decoding "boot time" for it would be a
-            # plausible-looking fabrication (same rule on every
-            # clocked path, so the differential tests hold)
-            ts = (_i64(vals[152]) if 152 in vals
-                  else _rel_abs(22) if 22 in vals else 0)
-            te = (_i64(vals[153]) if 153 in vals
-                  else _rel_abs(21) if 21 in vals else 0)
-            # dual-stack: v6 address IEs (27/28) take precedence,
-            # mirroring _decode_ipfix and the vectorized path — a
-            # v9 IPv6 template that falls back to this scalar
-            # decoder must not render sa/da as '0.0.0.0'; only a
-            # 16-byte IE decoded to a str counts (a non-16-width
-            # 27/28 is a plain int -> v4 fallback, like the
-            # vectorized path)
-            sa, da = vals.get(27), vals.get(28)
-            sa = sa if isinstance(sa, str) else _ip_str(vals.get(8, 0))
-            da = da if isinstance(da, str) else _ip_str(vals.get(12, 0))
-            rows.append((
-                ts, te, sa, da,
-                _i32(vals.get(7, 0)), _i32(vals.get(11, 0)),
-                _i32(vals.get(4, 0)), _i32(vals.get(6, 0)),
-                _i64(vals.get(2, 0)), _i64(vals.get(1, 0)),
-                _i32(vals.get(16, 0)), _i32(vals.get(17, 0)), exporter,
-            ))
-    return rows
-
-
 def _exporter_of(path: str) -> str:
     """Exporter identity for a datagram file: its directory (the datagram
     bridge writes one directory per exporter, standing in for the UDP
@@ -1938,50 +1847,36 @@ def make_decoder(initial_templates: dict | None = None,
     ``nfcapture`` DataSource (``sources/datasource.py``), which seeds it
     from the same harvest run over one capture file.
 
-    ``with_strings`` emits FLOW_STR_SCHEMA frames: v10 messages take the
-    in-order scalar walk (record widths depend on per-record length
-    prefixes — there is no record-parallel dtype for a varlen layout)
-    and surface every varlen string IE in the ``str_ies`` map (first in
-    template order doubling as ``app_name``) and every RFC 6313
-    basicList in the ``list_ies`` map; v5/v9 records (no varlen on
-    those wires) carry NULL. The default keeps the 13-column frame and
-    the vectorized fast paths byte-identical.
+    v5 datagrams go to :func:`_decode_v5_vec`, v9 and IPFIX ones to
+    :func:`_decode_templated_vec`, whatever ``with_strings`` says; only
+    messages a record dtype cannot express take the in-order walk.
+    ``with_strings`` emits FLOW_STR_SCHEMA frames: that walk surfaces
+    every varlen string IE in the ``str_ies`` map (first in template
+    order doubling as ``app_name``) and every RFC 6313 list in the
+    ``list_ies`` map, and rows without a varlen field (all v5/v9 rows,
+    every vectorized row) carry NULL there. The default keeps the
+    13-column frame.
     """
     seed = dict(initial_templates or {})
     boots = dict(boot_epochs or {})
-    schema = FLOW_STR_SCHEMA if with_strings else FLOW_SCHEMA
+    cols = _FLOW_STR_COLS if with_strings else _FLOW_COLS
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         templates = dict(seed)
-        cols = [f.name for f in schema.fields]
         for pdf in batches:
-            frames: list[pd.DataFrame] = []  # scalar-fallback messages
-            acc = _VecAccumulator()          # v9/IPFIX (template dtype path)
-            v5_arrs: list[np.ndarray] = []   # v5 (fixed layout → vectorized)
-            v5_exps: list[str] = []
+            frames: list[pd.DataFrame] = []  # in-order walk messages
+            acc = _VecAccumulator()
             for path, content in zip(pdf["path"], pdf["content"]):
                 exporter = _exporter_of(path)
                 for buf in iter_datagrams(bytes(content)):
                     try:
                         version = struct.unpack_from(">H", buf, 0)[0]
                         if version == 5:
-                            v5_arrs.append(_decode_v5_array(buf))
-                            v5_exps.append(exporter)
-                        elif version == 10 and with_strings:
-                            rows = _decode_ipfix(buf, exporter, templates,
-                                                 boots, strings=True)
-                            if rows:
-                                frames.append(
-                                    pd.DataFrame(rows, columns=cols))
-                        elif version == 9 and with_strings:
-                            rows = [r + (None, None, None) for r in
-                                    _decode_v9(buf, exporter, templates)]
-                            if rows:
-                                frames.append(
-                                    pd.DataFrame(rows, columns=cols))
+                            _decode_v5_vec(buf, exporter, acc)
                         elif version in (9, 10):
                             frames.extend(_decode_templated_vec(
-                                buf, exporter, templates, acc, boots))
+                                buf, exporter, templates, acc, boots,
+                                with_strings))
                         # unknown versions skipped, matching collector behavior
                     except (struct.error, IndexError, ValueError, KeyError):
                         # truncated/garbled datagram (np.frombuffer raises
@@ -1990,14 +1885,11 @@ def make_decoder(initial_templates: dict | None = None,
                         # the pipeline
                         continue
             frames.extend(acc.frames())
-            if v5_arrs:
-                f5 = _v5_frame(v5_arrs, v5_exps)
-                if with_strings:
-                    f5["app_name"] = None
-                    f5["str_ies"] = None
-                    f5["list_ies"] = None
-                frames.append(f5)
             frames = [f for f in frames if len(f)]
+            for f in frames:
+                # the accumulator's frames lack the string columns: NULL
+                for c in cols[len(f.columns):]:
+                    f[c] = None
             yield (pd.concat(frames, ignore_index=True) if frames
                    else pd.DataFrame(columns=cols))
 

@@ -17,8 +17,8 @@ import struct
 import pandas as pd
 import pytest
 
-from nf2pq_spark.sources.ipfix import (FLOW_SCHEMA, _decode_ipfix,
-                                       _decode_templated_vec, _decode_v9,
+from nf2pq_spark.sources.ipfix import (FLOW_SCHEMA, _decode_in_order,
+                                       _decode_templated_vec,
                                        _iter_template_sets, _VecAccumulator)
 
 _COLS = [f.name for f in FLOW_SCHEMA.fields]
@@ -65,8 +65,8 @@ def test_zero_field_template_is_withdrawal_not_hang():
                           _dset(256, struct.pack(">II", 3, 4)))
     # scalar
     tmpl: dict = {}
-    assert len(_decode_ipfix(announce, "e1", tmpl)) == 1
-    assert _decode_ipfix(withdraw, "e1", tmpl) == []
+    assert len(_decode_in_order(announce, "e1", tmpl)) == 1
+    assert _decode_in_order(withdraw, "e1", tmpl) == []
     assert ("e1", 256) not in tmpl
     # vectorized
     tmpl2: dict = {}
@@ -81,7 +81,7 @@ def test_zero_length_set_header_terminates_scalar():
     loop had this guard; the IPFIX scalar (the exotic-width fallback
     target) did not."""
     msg = _ipfix_msg(struct.pack(">HH", 2, 0))
-    assert _decode_ipfix(msg, "e1", {}) == []
+    assert _decode_in_order(msg, "e1", {}) == []
 
 
 def test_mid_message_template_change_decodes_in_order():
@@ -94,14 +94,14 @@ def test_mid_message_template_change_decodes_in_order():
         _tset(256, _AB), _dset(256, struct.pack(">IIII", 1, 2, 3, 4)),
         _tset(256, layout_b), _dset(256, struct.pack(">II", 9, 10)),
     )
-    scalar = _decode_ipfix(msg, "e1", {})
+    scalar = _decode_in_order(msg, "e1", {})
     assert len(scalar) == 4  # 2 A-records + 2 B-records
     vec = _vec_rows(msg)
     assert len(vec) == 4
     assert sorted(vec["sa"]) == sorted(r[2] for r in scalar)
     # and the cache ends on layout B either way
     t: dict = {}
-    _decode_ipfix(msg, "e1", t)
+    _decode_in_order(msg, "e1", t)
     assert t[("e1", 256)] == layout_b
 
 
@@ -142,7 +142,7 @@ def test_sixteen_byte_non_v6_ie_routes_to_scalar():
 
 def test_v9_scalar_decodes_ipv6_address_ies():
     """The v9 scalar fallback must render IPv6 IEs 27/28 exactly like
-    _decode_ipfix and the vectorized path — a v9 IPv6 template that hits
+    IPFIX and the vectorized path — a v9 IPv6 template that hits
     the scalar decoder (in-message conflict, exotic widths) previously
     emitted '0.0.0.0' for sa/da (path-dependent output, r4 advice)."""
     fields = [(27, 16), (28, 16), (2, 4)]
@@ -155,7 +155,7 @@ def test_v9_scalar_decodes_ipv6_address_ies():
     dset = struct.pack(">HH", 256, 4 + len(data)) + data
     hdr = struct.pack(">HHIIII", 9, 2, 50_000, 1_800_000_000, 0, 0)
     msg = hdr + tset + dset
-    scalar = _decode_v9(msg, "e1", {})
+    scalar = _decode_in_order(msg, "e1", {})
     assert len(scalar) == 1
     assert scalar[0][2] == "2001:db8::1" and scalar[0][3] == "2001:db8::2"
     vec = _vec_rows(msg)
@@ -175,7 +175,7 @@ def test_short_v6_ie_does_not_crash_frames():
     # the scalar reference must agree — `vals.get(27) or ...` leaked the
     # raw int 5 into the sa string column here before the isinstance
     # guard (path-dependent schema corruption, caught in r5 self-review)
-    scalar = _decode_ipfix(msg, "e1", {})
+    scalar = _decode_in_order(msg, "e1", {})
     assert len(scalar) == 1 and scalar[0][2] == "1.0.0.2"
 
 
@@ -192,7 +192,7 @@ def test_v9_absolute_timestamp_ies_preferred():
     dset = struct.pack(">HH", 256, 4 + len(data)) + data
     hdr = struct.pack(">HHIIII", 9, 2, 50_000, 1_800_000_000, 0, 0)
     msg = hdr + tset + dset
-    scalar = _decode_v9(msg, "e1", {})
+    scalar = _decode_in_order(msg, "e1", {})
     assert scalar[0][0] == 1_700_000_000_123
     vec = _vec_rows(msg)
     assert len(vec) == 1
@@ -323,10 +323,8 @@ def _v9_tset(tid: int, fields: list[tuple[int, int]]) -> bytes:
 def _both(msg: bytes, pre: dict | None = None):
     """(sorted scalar rows, sorted vectorized rows, caches-equal) for one
     message decoded by both paths from the same starting cache."""
-    version = struct.unpack_from(">H", msg, 0)[0]
-    scalar_fn = _decode_v9 if version == 9 else _decode_ipfix
     t1, t2 = dict(pre or {}), dict(pre or {})
-    rows = sorted(tuple(r) for r in scalar_fn(msg, "e1", t1))
+    rows = sorted(tuple(r) for r in _decode_in_order(msg, "e1", t1))
     got = sorted(tuple(r) for r in
                  _vec_rows(msg, t2).itertuples(index=False))
     return rows, got, t1 == t2
@@ -676,7 +674,7 @@ def test_v9_sysuptime_wrap_corrects_pre_wrap_flows():
     # pre-wrap → same correction applies
     golden_te = [boot - 4_000, boot + 31_000, boot + 61_400]
 
-    scalar = sorted(_decode_v9(dgram, "e1", {}))
+    scalar = sorted(_decode_in_order(dgram, "e1", {}))
     vec = _vec_rows(dgram)
     got_vec = sorted(tuple(r) for r in vec.itertuples(index=False))
     assert scalar == got_vec
@@ -703,7 +701,7 @@ def test_v9_fixture_header_keeps_wrap_correction_inert():
               "flg": 0, "ipkt": 1, "ibyt": 1, "ts_ms": m, "te_ms": m,
               "sas": 0, "das": 0} for i, m in enumerate(ms)]
     (dgram,) = encode_netflow_v9(flows)
-    rows = {r[4]: r for r in _decode_v9(dgram, "e1", {})}
+    rows = {r[4]: r for r in _decode_in_order(dgram, "e1", {})}
     for i, m in enumerate(ms):
         assert rows[i][0] == m % 2**32
     vec = _vec_rows(dgram)
@@ -717,8 +715,8 @@ def test_v5_sysuptime_wrap_corrects_pre_wrap_flows():
     scalar decoder and the vectorized frame path, plus the inert-fixture
     property on the default header (boot 0, sysUptime ≈ 2^32 → decoded
     == raw mod 2^32, which is what every v5 oracle models)."""
-    from nf2pq_spark.sources.ipfix import (_decode_v5, _decode_v5_array,
-                                           _v5_frame, encode_netflow_v5)
+    from nf2pq_spark.sources.ipfix import (_decode_v5, _decode_v5_vec,
+                                           encode_netflow_v5)
 
     sys_up, unix_s = 60_000, 1_800_000_000
     boot = unix_s * 1000 - sys_up
@@ -730,7 +728,9 @@ def test_v5_sysuptime_wrap_corrects_pre_wrap_flows():
     (dgram,) = encode_netflow_v5(flows, sys_uptime=sys_up, unix_secs=unix_s)
     golden = [boot - 5_000, boot + 30_000, boot + 60_400]
     scalar = {r[4]: r for r in _decode_v5(dgram, "e1")}
-    frame = _v5_frame([_decode_v5_array(dgram)], ["e1"])
+    acc = _VecAccumulator()
+    _decode_v5_vec(dgram, "e1", acc)
+    (frame,) = acc.frames()
     vec = {int(sp): int(t) for sp, t in zip(frame["sp"], frame["ts_ms"])}
     for i in range(3):
         assert scalar[i][0] == golden[i] == vec[i]
@@ -784,7 +784,7 @@ def test_v10_relative_ies_decode_via_ie160_boot():
     decode paths for the pre-wrap / normal / skew regimes, identical to
     the v9 golden-triple shape."""
     from nf2pq_spark.sources.ipfix import (_V9_TEMPLATE_FIELDS,
-                                           _decode_ipfix, encode_ipfix)
+                                           _decode_in_order, encode_ipfix)
 
     boot = 1_700_000_000_000
     export_s = (boot + 600_000) // 1000          # up exactly 10 min
@@ -796,7 +796,7 @@ def test_v10_relative_ies_decode_via_ie160_boot():
     assert boots == {("e1", 7): boot}
 
     golden = [boot - 5_000, boot + 30_000, boot + 600_400]
-    scalar = sorted(_decode_ipfix(msg, "e1", {}, boots))
+    scalar = sorted(_decode_in_order(msg, "e1", {}, boots))
     vec = _vec_rows(msg, boots=boots)
     assert scalar == sorted(tuple(r) for r in vec.itertuples(index=False))
     by_sp = {r[4]: r for r in scalar}
@@ -810,7 +810,7 @@ def test_v10_ie160_long_uptime_era():
     v9 header): stamps land in the CURRENT era, and a pre-wrap stamp
     still corrects into the previous one."""
     from nf2pq_spark.sources.ipfix import (_V9_TEMPLATE_FIELDS,
-                                           _decode_ipfix, encode_ipfix)
+                                           _decode_in_order, encode_ipfix)
 
     boot = 1_700_000_000_000
     up = 2**32 + 600_704                          # boot+up lands on a whole
@@ -823,7 +823,7 @@ def test_v10_ie160_long_uptime_era():
     boots = _boots_of(_ie160_options_msg(boot, export_s, 7))
 
     golden = [era_boot + 30_000, era_boot - 5_000]
-    scalar = sorted(_decode_ipfix(msg, "e1", {}, boots))
+    scalar = sorted(_decode_in_order(msg, "e1", {}, boots))
     vec = _vec_rows(msg, boots=boots)
     assert scalar == sorted(tuple(r) for r in vec.itertuples(index=False))
     by_sp = {r[4]: r for r in scalar}
@@ -836,28 +836,28 @@ def test_v10_relative_ies_without_boot_stay_zero():
     undecodable — both paths pin the pre-IE-160 behavior (0), never a
     guess."""
     from nf2pq_spark.sources.ipfix import (_V9_TEMPLATE_FIELDS,
-                                           _decode_ipfix, _v10_era_clock,
+                                           _decode_in_order, _v10_era_clock,
                                            encode_ipfix)
 
     (msg,) = encode_ipfix([_rel_flow(0, 30_000)],
                           template_fields=_V9_TEMPLATE_FIELDS,
                           template_id=310, export_time=1_700_000, odid=7)
     for boots in ({}, None, {("e1", 99): 123}):   # absent / None / odid miss
-        scalar = _decode_ipfix(msg, "e1", {}, boots)
+        scalar = _decode_in_order(msg, "e1", {}, boots)
         assert scalar[0][0] == 0 and scalar[0][1] == 0
         vec = _vec_rows(msg, boots=boots)
         assert int(vec["ts_ms"][0]) == 0
     # boot in the future → inconsistent clock → None, same 0 path
     assert _v10_era_clock(2_000_000_000_000, 1_999_999_999_999) is None
     future = {("e1", 7): 1_700_000 * 1000 + 1}
-    assert _decode_ipfix(msg, "e1", {}, future)[0][0] == 0
+    assert _decode_in_order(msg, "e1", {}, future)[0][0] == 0
 
 
 def test_v10_absolute_ies_win_over_era_clock():
     """A template carrying flowStart/EndMilliseconds (152/153) decodes
     absolute even when a boot epoch is known — mirror of
     test_v9_absolute_timestamp_ies_preferred."""
-    from nf2pq_spark.sources.ipfix import _decode_ipfix, encode_ipfix
+    from nf2pq_spark.sources.ipfix import _decode_in_order, encode_ipfix
 
     ts = 1_704_067_200_123
     flows = [{"sa_int": 1, "da_int": 2, "sp": 0, "dp": 1, "pr": 6,
@@ -865,7 +865,7 @@ def test_v10_absolute_ies_win_over_era_clock():
               "te_ms": ts + 1, "sas": 0, "das": 0}]
     (msg,) = encode_ipfix(flows, export_time=1_800_000_000, odid=7)
     boots = {("e1", 7): 1_700_000_000_000}
-    scalar = _decode_ipfix(msg, "e1", {}, boots)
+    scalar = _decode_in_order(msg, "e1", {}, boots)
     assert scalar[0][0] == ts and scalar[0][1] == ts + 1
     vec = _vec_rows(msg, boots=boots)
     assert int(vec["ts_ms"][0]) == ts
@@ -923,7 +923,7 @@ def test_v10_era_clock_differential_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from nf2pq_spark.sources.ipfix import _decode_ipfix
+    from nf2pq_spark.sources.ipfix import _decode_in_order
 
     widths = st.sampled_from([1, 2, 4, 8])
     fields_s = st.lists(
@@ -945,7 +945,7 @@ def test_v10_era_clock_differential_property():
                           export_s & 0xFFFFFFFF, 0, 7) + body
         boots = {("e1", 7 if hit else 8): boot}
         t1: dict = {}
-        scalar = _decode_ipfix(msg, "e1", t1, boots)
+        scalar = _decode_in_order(msg, "e1", t1, boots)
         vec = _vec_rows(msg, boots=boots)
         assert sorted(scalar) == sorted(
             tuple(r) for r in vec.itertuples(index=False))
@@ -969,7 +969,7 @@ def test_varlen_flow_template_decodes_fixed_fields():
     rec2 = struct.pack(">H", 1002) + bytes([255]) + \
         struct.pack(">H", 300) + b"x" * 300 + struct.pack(">H", 443)
     msg = _ipfix_msg(_tset(256, fields), _dset(256, rec1 + rec2))
-    scalar = _decode_ipfix(msg, "e1", {})
+    scalar = _decode_in_order(msg, "e1", {})
     assert [(r[4], r[5]) for r in scalar] == [(1001, 53), (1002, 443)]
     vec = _vec_rows(msg)
     assert sorted(scalar) == sorted(
@@ -1060,7 +1060,7 @@ def test_varlen_overrun_discards_partial_record_not_datagram():
     msg = _ipfix_msg(_tset(256, fields), _dset(256, good + evil),
                      _tset(257, _AB),
                      _dset(257, struct.pack(">II", 9, 10)))
-    scalar = _decode_ipfix(msg, "e1", {})
+    scalar = _decode_in_order(msg, "e1", {})
     # the good varlen record and the full second set survive; the evil
     # partial record is gone
     assert [(r[4], r[5]) for r in scalar if r[4]] == [(1001, 53)]
@@ -1135,12 +1135,12 @@ def test_no_timestamp_template_keeps_zero_sentinel_with_clock():
     # v10 with boot known
     msg = _ipfix_msg(_tset(256, _AB), _dset(256, struct.pack(">II", 1, 2)))
     boots = {("e1", 1): 1_700_000_000_000}
-    assert _decode_ipfix(msg, "e1", {}, boots)[0][0] == 0
+    assert _decode_in_order(msg, "e1", {}, boots)[0][0] == 0
     assert int(_vec_rows(msg, boots=boots)["ts_ms"][0]) == 0
     # v9: header clock always present — same sentinel now
     v9 = _v9_msg(_v9_tset(300, _AB),
                  _dset(300, struct.pack(">II", 1, 2)))
-    assert _decode_v9(v9, "e1", {})[0][0] == 0
+    assert _decode_in_order(v9, "e1", {})[0][0] == 0
     assert int(_vec_rows(v9)["ts_ms"][0]) == 0
 
 
@@ -1459,7 +1459,7 @@ def test_varlen_basiclist_model_differential_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_ipfix,
+    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_in_order,
                                            encode_basiclist, encode_ipfix)
 
     text = st.text(
@@ -1537,7 +1537,7 @@ def test_varlen_basiclist_model_differential_property():
         tmpl: dict = {}
         rows = []
         for m in msgs:
-            rows.extend(_decode_ipfix(m, "e1", tmpl, strings=True))
+            rows.extend(_decode_in_order(m, "e1", tmpl, strings=True))
         assert len(rows) == n_recs
         # model: template-order varlen strings, element-keyed lists;
         # PEN varlen invisible; stl flattens column-wise by element IE
@@ -1599,7 +1599,7 @@ def test_pen_specs_align_the_field_walk_on_both_paths():
                + struct.pack(">Q", 4242) + b"\xff" * 16)
     m = _ipfix_msg(_tset_pen(300, specs), _dset(300, payload * 2))
     t1: dict = {}
-    rows = _decode_ipfix(m, "e1", t1)
+    rows = _decode_in_order(m, "e1", t1)
     assert len(rows) == 2
     for r in rows:
         assert r[4] == 111 and r[5] == 222 and r[9] == 4242  # sp, dp, ibyt
@@ -1613,7 +1613,9 @@ def test_pen_specs_align_the_field_walk_on_both_paths():
 
 def test_pen_template_stays_on_the_vectorized_path():
     """Vendor IEs must not knock a message off the frombuffer fast path:
-    PEN fields of ANY fixed width ride as opaque padding columns."""
+    PEN fields of ANY fixed width ride as opaque padding columns, and so
+    does every IANA IE the flow frame never reads (sourceMacAddress,
+    6 bytes)."""
     import numpy as np
 
     from nf2pq_spark.sources.ipfix import (_np_dtype_for, _pen_key,
@@ -1625,15 +1627,22 @@ def test_pen_template_stays_on_the_vectorized_path():
     dt = _np_dtype_for(fields)
     assert dt is not None and dt.itemsize == 4 + 2 + 3 + 8
     assert dt["p0"] == np.dtype("V4") and dt["p2"] == np.dtype("V3")
+    assert _np_dtype_for([(56, 6), (7, 2)])["p0"] == np.dtype("V6")
     # and the whole message goes through the accumulator (no scalar
-    # fallback frames returned)
-    m = _ipfix_msg(_tset_pen(300, [(0x123, 4, 9), (7, 2)]),
-                   _dset(300, b"\x00" * 4 + struct.pack(">H", 7)))
-    acc = _VecAccumulator()
-    fallback = _decode_templated_vec(m, "e1", {}, acc)
-    assert fallback == []
-    frames = [f for f in acc.frames() if len(f)]
-    assert len(frames) == 1 and frames[0]["sp"].iloc[0] == 7
+    # fallback frames returned), decoding what the in-order walk does
+    pen = _ipfix_msg(_tset_pen(300, [(0x123, 4, 9), (7, 2)]),
+                     _dset(300, b"\x00" * 4 + struct.pack(">H", 7)))
+    mac = _ipfix_msg(_tset(301, [(56, 6), (7, 2), (1, 4)]),
+                     _dset(301, b"\x02\x00\x5e\x00\x53\x01"
+                           + struct.pack(">HI", 7, 1500)))
+    for m in (pen, mac):
+        acc = _VecAccumulator()
+        fallback = _decode_templated_vec(m, "e1", {}, acc)
+        assert fallback == []
+        frames = [f for f in acc.frames() if len(f)]
+        assert len(frames) == 1 and frames[0]["sp"].iloc[0] == 7
+        assert [tuple(r) for r in frames[0].itertuples(index=False)] == \
+            _decode_in_order(m, "e1", {})
 
 
 def test_declared_length_past_buffer_drops_packet_eagerly():
@@ -1667,7 +1676,7 @@ def test_pen_varlen_value_consumed_not_surfaced():
     msgs = encode_ipfix(flows, template_fields=fields, template_id=402)
     tmpl: dict = {}
     rows = [r for m in msgs
-            for r in _decode_ipfix(m, "e1", tmpl, strings=True)]
+            for r in _decode_in_order(m, "e1", tmpl, strings=True)]
     assert len(rows) == 1
     r = rows[0]
     assert r[4] == 5 and r[5] == 6 and r[9] == 99
@@ -1683,7 +1692,7 @@ def test_v9_bit15_type_is_a_plain_4_byte_spec():
     m = _v9_msg(_v9_tset(301, fields),
                 struct.pack(">HH", 301, 4 + len(payload)) + payload)
     t1: dict = {}
-    rows = _decode_v9(m, "e1", t1)
+    rows = _decode_in_order(m, "e1", t1)
     assert len(rows) == 1 and rows[0][4] == 314
     assert t1[("e1", 301)] == [(0x8123, 4), (7, 2)]
     got = _vec_rows(m, t2 := {})
@@ -1773,7 +1782,7 @@ def _stl_flows_msg(fields, flows, extra_templates, tid=403):
 def test_subtemplatelist_roundtrip_columnwise():
     """An stl of (sp, ibyt) sub-records surfaces column-wise in list_ies
     keyed by element IE, and fixed fields after the list keep decoding."""
-    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_ipfix,
+    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_in_order,
                                            encode_subtemplatelist)
 
     sub = [(7, 2), (1, 4)]
@@ -1784,7 +1793,7 @@ def test_subtemplatelist_roundtrip_columnwise():
     msgs = _stl_flows_msg(fields, flows, [(340, sub)])
     tmpl: dict = {}
     rows = [r for m in msgs
-            for r in _decode_ipfix(m, "e1", tmpl, strings=True)]
+            for r in _decode_in_order(m, "e1", tmpl, strings=True)]
     assert len(rows) == 1
     r = rows[0]
     assert r[6] == 6 and r[8] == 55  # pr, ipkt (after the list)
@@ -1796,7 +1805,7 @@ def test_subtemplatemultilist_segments_concatenate():
     """stml: same-template segments concatenate in wire order; segments
     of a second template surface side by side; a segment whose template
     is unknown is skipped whole (never the record)."""
-    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_ipfix,
+    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_in_order,
                                            encode_subtemplatemultilist)
 
     subA, subB = [(11, 2)], [(2, 4)]
@@ -1811,7 +1820,7 @@ def test_subtemplatemultilist_segments_concatenate():
     msgs = _stl_flows_msg(fields, flows, [(341, subA), (342, subB)])
     tmpl: dict = {}
     rows = [r for m in msgs
-            for r in _decode_ipfix(m, "e1", tmpl, strings=True)]
+            for r in _decode_in_order(m, "e1", tmpl, strings=True)]
     assert len(rows) == 1
     r = rows[0]
     assert r[6] == 17 and r[9] == 77
@@ -1819,7 +1828,7 @@ def test_subtemplatemultilist_segments_concatenate():
 
 
 def test_subtemplatelist_unknown_template_skips_field_not_record():
-    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_ipfix,
+    from nf2pq_spark.sources.ipfix import (_VARLEN, _decode_in_order,
                                            encode_subtemplatelist)
 
     fields = [(7, 2), (292, _VARLEN), (1, 4)]
@@ -1829,7 +1838,7 @@ def test_subtemplatelist_unknown_template_skips_field_not_record():
     msgs = _stl_flows_msg(fields, flows, [])  # 350 never announced
     tmpl: dict = {}
     rows = [r for m in msgs
-            for r in _decode_ipfix(m, "e1", tmpl, strings=True)]
+            for r in _decode_in_order(m, "e1", tmpl, strings=True)]
     assert len(rows) == 1
     assert rows[0][4] == 8 and rows[0][9] == 12
     assert rows[0][15] is None
@@ -1974,7 +1983,116 @@ def test_scalar_and_vectorized_agree_on_declared_length_cut():
     (msg,) = encode_ipfix(flows)
     length = struct.unpack_from(">H", msg, 2)[0]
     cut = msg[:2] + struct.pack(">H", length - 10) + msg[4:]
-    scalar = _decode_ipfix(cut, "e1", {})
+    scalar = _decode_in_order(cut, "e1", {})
     assert len(scalar) == 1
     assert sorted(scalar) == sorted(
         tuple(r) for r in _vec_rows(cut).itertuples(index=False))
+
+
+@pytest.mark.parametrize("v9", [False, True], ids=["ipfix", "v9"])
+def test_template_record_longer_than_its_set_caches_nothing(v9):
+    """A template record claiming 4 field specs in a set holding 2 read
+    the following data set's header and first record as specs and
+    cached the layout [(8, 4), (12, 4), (256, 12), (0, 1)]. The specs
+    are bounded by their set: every walk drops the datagram, and no
+    layout is cached for the tid."""
+    from nf2pq_spark.sources.ipfix import make_decoder
+
+    rec = struct.pack(">HH", 256, 4) + b"".join(
+        struct.pack(">HH", ie, ln) for ie, ln in _AB)
+    tset = struct.pack(">HH", 0 if v9 else 2, 4 + len(rec)) + rec
+    dset = _dset(256, struct.pack(">II", 1, 2))
+    msg = _v9_msg(tset, dset) if v9 else _ipfix_msg(tset, dset)
+    with pytest.raises(struct.error):
+        list(_iter_template_sets(msg))
+    for walk in (_decode_in_order, lambda m, e, t: _decode_templated_vec(
+            m, e, t, _VecAccumulator())):
+        templates: dict = {}
+        with pytest.raises(struct.error):
+            walk(msg, "e1", templates)
+        assert ("e1", 256) not in templates
+    pdf = pd.DataFrame({"path": ["caps/e1/cap_0.bin"], "content": [msg]})
+    assert sum(len(f) for f in make_decoder()(iter([pdf]))) == 0
+
+
+def test_v9_varlen_width_drops_its_data_sets_on_both_walks():
+    """RFC 3954 has no variable-length encoding: a v9 template field of
+    length 65535 is a literal width no set can hold, so its data sets
+    drop on the in-order and the vectorized walk alike, for an IE the
+    flow frame reads or not. The same layout in IPFIX is an RFC 7011 §7
+    varlen field and decodes."""
+    payload = (struct.pack(">H", 1001) + bytes([2]) + b"ok"
+               + struct.pack(">H", 53))
+    for fields in ([(7, 2), (650, 0xFFFF), (11, 2)],
+                   [(7, 2), (8, 0xFFFF), (11, 2)]):
+        m9 = _v9_msg(_v9_tset(300, fields), _dset(300, payload))
+        rows, got, teq = _both(m9)
+        assert rows == got == [] and teq
+        m10 = _ipfix_msg(_tset(300, fields), _dset(300, payload))
+        rows, got, teq = _both(m10)
+        assert rows == got and teq
+        assert [(r[4], r[5]) for r in rows] == [(1001, 53)]
+
+
+def test_make_decoder_mixed_corpus_with_and_without_strings():
+    """One capture mixing v5, v9, fixed-width IPFIX, varlen IPFIX, an
+    unusual width (a 3-byte octet count) and an in-message template
+    change decodes to the same 13 flow columns, as a multiset, with
+    ``with_strings`` on and off, and to the same rows as the reference
+    walks (_decode_v5 and _decode_in_order, datagram by datagram). With
+    strings on, the string columns are NULL on every row whose template
+    has no variable-length field."""
+    from collections import Counter
+
+    from nf2pq_spark.sources.ipfix import (_CAPTURE_MAGIC, _VARLEN,
+                                           FLOW_STR_SCHEMA, _decode_v5,
+                                           encode_ipfix, encode_netflow_v5,
+                                           encode_netflow_v9, make_decoder)
+
+    def flows(base, n=4):
+        return [{"sa_int": base + i, "da_int": 99, "sp": i, "dp": 443,
+                 "pr": 6, "flg": 16, "ipkt": 1 + i, "ibyt": 100 + i,
+                 "ts_ms": 1_700_000_000_000 + base + i,
+                 "te_ms": 1_700_000_000_500 + base + i, "sas": 1, "das": 2,
+                 "app": f"app{i}"} for i in range(n)]
+
+    varlen = [(8, 4), (7, 2), (96, _VARLEN), (1, 4), (152, 8)]
+    odd = [(8, 4), (7, 2), (1, 3), (152, 8)]
+    ab = [(8, 4), (12, 4)]
+    conflict = _ipfix_msg(
+        _tset(340, ab), _dset(340, struct.pack(">IIII", 600, 1, 601, 2)),
+        _tset(340, [(8, 4)]), _dset(340, struct.pack(">II", 602, 603)))
+    dgrams = (encode_netflow_v5(flows(100), per_packet=3)
+              + encode_netflow_v9(flows(200), per_packet=3)
+              + encode_ipfix(flows(300), per_packet=3)
+              + encode_ipfix(flows(400), per_packet=3, template_id=320,
+                             template_fields=varlen)
+              + encode_ipfix(flows(500), per_packet=3, template_id=330,
+                             template_fields=odd)
+              + [conflict])
+    content = _CAPTURE_MAGIC + b"".join(
+        struct.pack(">I", len(d)) + d for d in dgrams)
+    pdf = pd.DataFrame({"path": ["caps/e1/cap_0.bin"],
+                        "content": [content]})
+
+    def decoded(with_strings):
+        return pd.concat(list(make_decoder(with_strings=with_strings)(
+            iter([pdf.copy()]))), ignore_index=True)
+
+    plain, strs = decoded(False), decoded(True)
+    assert list(plain.columns) == _COLS
+    assert list(strs.columns) == [f.name for f in FLOW_STR_SCHEMA.fields]
+    templates: dict = {}
+    ref = [tuple(r) for d in dgrams
+           for r in (_decode_v5(d, "caps/e1") if d[1] == 5 else
+                     _decode_in_order(d, "caps/e1", templates))]
+    assert len(ref) == 5 * 4 + 4
+    for frame in (plain, strs):
+        got = Counter(tuple(r) for r in frame[_COLS].itertuples(index=False))
+        assert got == Counter(ref)
+    is_varlen = strs["sa"].isin([f"0.0.1.{144 + i}" for i in range(4)])
+    assert sorted(strs.loc[is_varlen, "app_name"]) == [
+        f"app{i}" for i in range(4)]
+    rest = strs.loc[~is_varlen, ["app_name", "str_ies", "list_ies"]]
+    assert len(rest) == len(strs) - 4 and rest.isna().all(axis=None)
+

@@ -237,8 +237,8 @@ def test_exact_dedup(spark):
 def test_v5_vectorized_decode_equals_scalar():
     """The numpy v5 fast path produces exactly the scalar reference
     decoder's rows (same values, same order within a datagram)."""
-    from nf2pq_spark.sources.ipfix import (_decode_v5, _decode_v5_array,
-                                           _v5_frame, encode_netflow_v5)
+    from nf2pq_spark.sources.ipfix import (_decode_v5, _decode_v5_vec,
+                                           _VecAccumulator, encode_netflow_v5)
 
     flows = [
         {"sa_int": (7 * i) % (1 << 32), "da_int": (11 * i + 3) % (1 << 32),
@@ -249,7 +249,9 @@ def test_v5_vectorized_decode_equals_scalar():
     ]
     for dgram in encode_netflow_v5(flows, per_packet=30):
         scalar = _decode_v5(dgram, "exp")
-        fast = _v5_frame([_decode_v5_array(dgram)], ["exp"])
+        acc = _VecAccumulator()
+        _decode_v5_vec(dgram, "exp", acc)
+        (fast,) = acc.frames()
         assert [tuple(r) for r in fast.itertuples(index=False)] == scalar
 
 
@@ -618,7 +620,7 @@ def test_ipv4_cidr_property_vs_stdlib(spark):
 def test_templated_vectorized_decode_equals_scalar():
     """The template-derived-dtype fast path produces exactly the scalar
     reference decode for IPFIX (v4 + v6 templates) and NetFlow v9."""
-    from nf2pq_spark.sources.ipfix import (_decode_ipfix, _decode_v9,
+    from nf2pq_spark.sources.ipfix import (_decode_in_order,
                                            _decode_templated_vec,
                                            _VecAccumulator,
                                            encode_ipfix, encode_netflow_v9)
@@ -641,10 +643,7 @@ def test_templated_vectorized_decode_equals_scalar():
     )
     for dgram in cases:
         t_scalar, t_vec = {}, {}
-        import struct
-        version = struct.unpack_from(">H", dgram, 0)[0]
-        scalar_fn = _decode_v9 if version == 9 else _decode_ipfix
-        rows = scalar_fn(dgram, "exp", t_scalar)
+        rows = _decode_in_order(dgram, "exp", t_scalar)
         acc = _VecAccumulator()
         frames = _decode_templated_vec(dgram, "exp", t_vec, acc)
         frames.extend(acc.frames())
